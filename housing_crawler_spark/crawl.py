@@ -14,7 +14,7 @@ per round):
   ``seen ⊆ known``, so the J1 discovered-link gate is a single exact
   check against *known* — bloom-prefiltered, and at scale served by the
   HASH-BUCKETED known base: membership lives in pmod(url_hash,
-  known_buckets) buckets behind a per-bucket manifest, compactions fold
+  buckets) buckets behind a per-bucket manifest, compactions fold
   deltas into ONLY the dirty buckets (clean buckets carried forward by
   reference, zero bytes), and the per-round backstop reads ONLY the
   buckets the bloom-surviving candidates hash into, joined broadcast so
@@ -30,15 +30,20 @@ per round):
 
   and every ``compact_every`` rounds it is materialized as a base
   snapshot so reconstruction reads a bounded number of delta files.
-  The base is hash-bucketed like the known set (pmod(url_hash,
-  frontier_buckets) behind a manifest, url_hash-sorted within each
-  bucket for rowgroup range pruning — the north_rule's frontier
-  compaction), and because every frontier mutation flows through the
-  fetch_log/known deltas, a compaction rewrites ONLY the buckets
-  those deltas touch: clean buckets carry forward by reference across
-  generations, removal-emptied buckets drop out of the manifest, and
-  a quiet interval re-commits the old manifest without writing a byte
+  The base is hash-bucketed like the known set (same ``buckets``
+  modulus, url_hash-sorted within each bucket for rowgroup range
+  pruning — the north_rule's frontier compaction), and because every
+  frontier mutation flows through the fetch_log/known deltas, a
+  compaction rewrites ONLY the buckets those deltas touch: clean
+  buckets carry forward by reference across generations,
+  removal-emptied buckets drop out of the manifest, and a quiet
+  interval re-commits the old manifest without writing a byte
   (test_frontier_buckets.py).
+- round 0 is an ordinary bucketed state: the seeds are written once as
+  a bucketed snapshot whose manifest the known base, the frontier base
+  and known delta 0 all commit, so every probe and compaction reads a
+  manifest and every compaction is incremental. A base without a manifest comes
+  from the pre-bucketing store format and is rejected (ValueError).
 - ``fetch_log`` / ``images`` — append-only deltas (per-partition
   lineage + metrics; the input_hint image table).
 
@@ -66,7 +71,9 @@ asserted by test_crawl_parity.py.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -86,31 +93,29 @@ class EngineConfig:
     salt_threshold: int = 100_000
     bloom_shards: int = 8
     bloom_min_known: int = 200_000  # below this an exact anti-join is cheaper
-    bloom_bits_per_key: int = 10
-    bloom_growth: int = 4  # headroom factor when sizing/rebuilding shards
     bloom_compact_every: int = 32  # rounds between full-set bloom deltas
     # (bounds reconstruction read amplification: current_bloom only reads
     # deltas back to the last full write)
-    compact_every: int = 8  # rounds between frontier base materializations
-    known_buckets: int = 16  # url_hash buckets of the known membership set
-    # (at 10^10 URLs: thousands of buckets, so a probe's candidate set
-    # prunes to a small fraction of the table and a compaction rewrites
-    # only the buckets that actually gained rows)
-    frontier_buckets: int = 16  # url_hash buckets of the frontier base
-    # (same incremental-compaction shape as known_buckets, but the
-    # frontier is MUTABLE: a compaction rewrites exactly the buckets
-    # some fetched/admitted/captcha'd URL hashes into since the last
-    # base, and a removal-only bucket goes empty rather than inheriting)
+    compact_every: int = 8  # rounds between base materializations
+    buckets: int = 16  # url_hash buckets of the known AND frontier bases
+    # (one modulus: both bases start as the same round-0 snapshot. At
+    # 10^10 URLs: thousands of buckets, so a probe's candidate set prunes
+    # to a small fraction of the table and a compaction rewrites only the
+    # buckets some fetched/admitted/captcha'd URL hashes into; the
+    # frontier is MUTABLE, so a removal-only bucket goes empty rather
+    # than inheriting)
     backstop_broadcast_max: int = 2_000_000  # maybe-seen rows above which
     # the exact backstop falls back from broadcast joins to a shuffle
     # anti-join (a revisit-heavy round can make MOST links bloom
     # survivors; broadcasting an unbounded candidate set would pressure
     # the driver, while the fallback still reads only pruned buckets)
-    fetch_partitions: int | None = None  # default: spark.sql.shuffle.partitions
-    snapshot_partitions: int = 8  # files per compacted base (local default)
     verify_decode: bool = False  # round-trip decode + invariant check at ingest
     image_stage_enabled: bool = True  # off → images backfilled later (J8 path)
 
+
+BLOOM_BITS_PER_KEY = 10
+BLOOM_GROWTH = 4  # headroom factor when sizing/rebuilding shards
+BUCKET_COL = "__b"  # partition column of the bucketed base snapshots
 
 # known/frontier rows share this shape (attempts/next_round only
 # meaningful post-captcha-override)
@@ -131,6 +136,16 @@ IMAGE_WRITE_OPTS = {
     # big row groups anyway
     "parquet.block.size": str(4 * 1024 * 1024),
 }
+
+
+def _union(dfs: list[DataFrame | None], cols: list[str]) -> DataFrame | None:
+    """unionByName of the non-None frames' ``cols``; None if there are none."""
+    dfs = [d.select(*cols) for d in dfs if d is not None]
+    return reduce(DataFrame.unionByName, dfs) if dfs else None
+
+
+def _shuffle_partitions(spark: SparkSession) -> int:
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 # ---------------------------------------------------------------------------
@@ -251,8 +266,11 @@ class CrawlEngine:
     # -- initialization ------------------------------------------------
 
     def init_state(self, seed_rows: list[dict], robots_rows: list[dict]) -> None:
-        """Round 0: canonicalize + gate + dedup the seed list → known
-        delta 0 (which doubles as the first frontier base)."""
+        """Round 0: canonicalize + gate + dedup the seed list into ONE
+        bucketed snapshot whose manifest three commit entries share: the
+        frontier base, the known base and known delta 0 (a bucket is
+        shared by reference, exactly as a compaction's ``inherit``
+        does), so the seeds are stored once."""
         spark = self.spark
         raw = spark.createDataFrame(
             pd.DataFrame(seed_rows)[
@@ -274,14 +292,19 @@ class CrawlEngine:
             .withColumn("attempts", F.lit(0))
             .withColumn("next_round", F.lit(1))
             .select(*[F.col(c).cast(types[c]).alias(c) for c in KNOWN_COLS])
-            .coalesce(self.cfg.snapshot_partitions)
         )
-        infos = [self.store.write_delta(known0, "known", 0)]
-        # base 0 = a byte copy of delta 0 — don't recompute the lineage
-        known0_back = spark.read.parquet(infos[0]["path"])
-        infos.append(self.store.write_snapshot(known0_back, "frontier_base", 0))
-        infos.append(self.store.write_snapshot(robots, "robots", 0))
-        self.store.commit_round(0, infos, {"streaks": {}, "halted": [], "n_known": None})
+        base0 = self._write_buckets(
+            known0, "frontier_base", 0, None, list(range(self.cfg.buckets))
+        )
+        infos = [
+            {**base0, "table": "known", "kind": "delta"},
+            base0,
+            {**base0, "table": "known"},
+            # a few rows per host: one file, not one per core
+            self.store.write_snapshot(robots.coalesce(1), "robots", 0),
+        ]
+        n_known = sum(self.store.footer_rows(p) for p in base0["manifest"].values())
+        self.store.commit_round(0, infos, {"streaks": {}, "halted": [], "n_known": n_known})
 
     # -- derived state ---------------------------------------------------
 
@@ -291,12 +314,31 @@ class CrawlEngine:
         fetched-deltas, captcha overrides last-writer-wins — seen and
         captcha state are both derived views of fetch_log, so a round
         commits just fetch_log + known + images)."""
+        return self._frontier(*self._since_base(r))
+
+    def _since_base(self, r: int) -> tuple[int, DataFrame | None, DataFrame | None]:
+        """(b, known deltas, fetch_log deltas) after the latest bases at
+        or before round ``r``. The known and frontier bases are written
+        in the same rounds (round 0 and every compaction), so one read of
+        each delta table serves the frontier, the known set and the
+        compaction of a round."""
+        b = self._base_round("known", r)
+        b_f = self._base_round("frontier_base", r)
+        if b_f != b:
+            raise ValueError(
+                f"{self.store.root}: known base @{b} and frontier base @{b_f}"
+                " are out of step"
+            )
         spark, store = self.spark, self.store
-        b = store.latest_snapshot_round("frontier_base", r)
-        base = store.read_snapshot(spark, "frontier_base", b)
-        adds = store.read_deltas(spark, "known", r, from_round=b + 1)
+        return (
+            b,
+            store.read_deltas(spark, "known", r, from_round=b + 1),
+            store.read_deltas(spark, "fetch_log", r, from_round=b + 1),
+        )
+
+    def _frontier(self, b: int, adds: DataFrame | None, log: DataFrame | None) -> DataFrame:
+        base = self.store.read_snapshot(self.spark, "frontier_base", b)
         cand = base if adds is None else base.unionByName(adds)
-        log = store.read_deltas(spark, "fetch_log", r, from_round=b + 1)
         if log is not None:
             fetched_urls = log.filter(F.col("kind") != "captcha").select("canonical_url")
             cand = cand.join(fetched_urls, "canonical_url", "left_anti")
@@ -329,52 +371,80 @@ class CrawlEngine:
         10^4 dirs per round at 10^4 rounds)."""
         return self.store.read_compacted(self.spark, "known", r)
 
-    def _kb(self, col) -> F.Column:
-        """Known-set bucket of a url_hash column (pmod keeps negative
-        xxhash64 values in range)."""
-        return F.pmod(col, F.lit(self.cfg.known_buckets)).cast("int")
+    def _bucket(self, col) -> F.Column:
+        """Base bucket of a url_hash column (pmod keeps negative xxhash64
+        values in range)."""
+        return F.pmod(col, F.lit(self.cfg.buckets)).cast("int")
 
-    def _fb(self, col) -> F.Column:
-        """Frontier-base bucket of a url_hash column."""
-        return F.pmod(col, F.lit(self.cfg.frontier_buckets)).cast("int")
+    def _base_round(self, table: str, r: int) -> int:
+        """Round of ``table``'s latest base at or before round ``r``.
+        Every base is bucketed from round 0 on, so one without a
+        manifest can only come from an older store format."""
+        b = self.store.latest_snapshot_round(table, r)
+        info = None if b is None else self.store.snapshot_info(table, b)
+        if info is None or "manifest" not in info:
+            raise ValueError(
+                f"{self.store.root}: no bucketed {table} base at or before"
+                f" round {r}; the store uses the pre-bucketing format (no"
+                " bucket manifest on the base snapshots). Crawl it again"
+                " from init_state into a fresh store."
+            )
+        return b
+
+    def _write_buckets(
+        self,
+        rows: DataFrame | None,
+        table: str,
+        r: int,
+        prev: dict | None,
+        dirty: list[int],
+    ) -> dict:
+        """Write the FULL current rows of the ``dirty`` buckets as round
+        ``r``'s snapshot of ``table``, url_hash-sorted within each bucket
+        (rowgroup range stats); every other bucket of ``prev``'s manifest
+        carries forward by reference, and a dirty bucket with no rows
+        drops out. No dirty bucket: re-commit ``prev``, zero bytes."""
+        if not dirty:
+            return dict(prev)
+        # hash-partitioning by bucket keeps each bucket in ONE task, so
+        # one file per bucket; capping the tasks at the session's shuffle
+        # parallelism avoids paying the per-task fixed cost once per
+        # bucket (the round-0 write covers every bucket)
+        n_tasks = min(len(dirty), _shuffle_partitions(self.spark))
+        out = (
+            rows.withColumn("__h", url_hash(F.col("canonical_url")))
+            .withColumn(BUCKET_COL, self._bucket(F.col("__h")))
+            .filter(F.col(BUCKET_COL).isin(dirty))
+            .repartition(n_tasks, BUCKET_COL)
+            .sortWithinPartitions(BUCKET_COL, "__h")
+            .drop("__h")
+        )
+        return self.store.write_bucketed_snapshot(
+            out,
+            table,
+            r,
+            BUCKET_COL,
+            inherit=None if prev is None else prev["manifest"],
+            dirty=dirty,
+        )
 
     def _known_membership_pruned(self, r: int, buckets: list[int]) -> DataFrame | None:
         """(url_hash, canonical_url) membership rows restricted to the
         given url_hash buckets: manifest-pruned read of the bucketed
-        known_base (only those buckets' parquet dirs are even listed)
-        ∪ the bounded deltas since it, kb-filtered. I/O is ∝ candidate
-        buckets + recent deltas — never ∝ |known|."""
+        known base (only those buckets' parquet dirs are even listed)
+        ∪ the bounded deltas since it, bucket-filtered. I/O is ∝
+        candidate buckets + recent deltas — never ∝ |known|."""
         spark, store = self.spark, self.store
-        b = store.latest_snapshot_round("known", r)
-        parts = []
-        if b is not None:
-            info = store.snapshot_info("known", b)
-            if info is not None and "manifest" in info:
-                base = store.read_snapshot_buckets(spark, "known", b, buckets)
-            else:
-                # legacy (pre-bucketing) snapshot: no manifest to prune
-                # by — fall back to the full snapshot kb-filtered, exactly
-                # like the compaction path's legacy handling (round-5
-                # advice: the next compaction converts it to bucketed
-                # form; until then the probe pays one unpruned scan
-                # rather than crashing on resume of an old store)
-                base = store.read_snapshot(spark, "known", b).filter(
-                    self._kb(url_hash(F.col("canonical_url"))).isin(buckets)
-                )
-            if base is not None:
-                parts.append(base.select("canonical_url"))
-        deltas = store.read_deltas(
-            spark, "known", r, from_round=(b + 1 if b is not None else 0)
-        )
+        b = self._base_round("known", r)
+        parts = [store.read_snapshot_buckets(spark, "known", b, buckets)]
+        deltas = store.read_deltas(spark, "known", r, from_round=b + 1)
         if deltas is not None:
             parts.append(
-                deltas.select("canonical_url").filter(
-                    self._kb(url_hash(F.col("canonical_url"))).isin(buckets)
-                )
+                deltas.filter(self._bucket(url_hash(F.col("canonical_url"))).isin(buckets))
             )
-        if not parts:
+        out = _union(parts, ["canonical_url"])
+        if out is None:
             return None
-        out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         return out.select(
             url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url"
         )
@@ -385,7 +455,7 @@ class CrawlEngine:
         """Exact not-in-known gate for bloom-surviving candidates, in
         the 100×-scale shape: bloom passes the definitely-new majority
         through untouched; the maybe-seen minority's url_hash buckets
-        are collected (≤ known_buckets ints) and ONLY those buckets of
+        are collected (≤ buckets ints) and ONLY those buckets of
         the known set are read. The exact check then runs as two
         broadcast joins of the SMALL candidate set against the pruned
         scan — the known side is never shuffled (no Exchange; asserted
@@ -402,12 +472,12 @@ class CrawlEngine:
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
         row = (
-            maybe.select(self._kb(F.col("url_hash")).alias("__kb"))
+            maybe.select(self._bucket(F.col("url_hash")).alias("__b"))
             .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"), F.collect_set("__kb").alias("kbs"))
+            .agg(F.count(F.lit(1)).alias("n"), F.collect_set("__b").alias("bs"))
             .first()
         )
-        n_maybe, buckets = int(row["n"]), sorted(int(b) for b in row["kbs"])
+        n_maybe, buckets = int(row["n"]), sorted(int(b) for b in row["bs"])
         if not buckets:
             return fresh, probed
         known_sub = self._known_membership_pruned(r, buckets)
@@ -477,13 +547,13 @@ class CrawlEngine:
         if not use_bloom:
             return None, None, {}
         spark, store, cfg = self.spark, self.store, self.cfg
-        n_known_prev = last_metrics.get("n_known") or 0
+        n_known_prev = last_metrics["n_known"]
         prev_covers = last_metrics.get("bloom_covers")
         prev_bits = last_metrics.get("bloom_n_bits")
         capacity = (
             None
             if prev_bits is None
-            else prev_bits * cfg.bloom_shards // cfg.bloom_bits_per_key
+            else prev_bits * cfg.bloom_shards // BLOOM_BITS_PER_KEY
         )
         meta: dict = {}
         full_build = prev_covers is None or (
@@ -492,7 +562,7 @@ class CrawlEngine:
         if full_build:
             # full (re)build, sized with growth headroom so subsequent
             # rounds stay incremental
-            want = cfg.bloom_growth * cfg.bloom_bits_per_key * max(1, n_known_prev)
+            want = BLOOM_GROWTH * BLOOM_BITS_PER_KEY * max(1, n_known_prev)
             # floor at 2^12 bits/shard (matches bloom.build_shards min_bits)
             n_bits = 1 << max(12, (want // cfg.bloom_shards).bit_length())
             delta_df = bloom.build_shards(
@@ -571,7 +641,7 @@ class CrawlEngine:
         last_metrics = store.commits()[-1]["metrics"]
         streaks: dict[str, int] = dict(last_metrics.get("streaks", {}))
         halted: set[str] = set(last_metrics.get("halted", []))
-        n_known_prev = last_metrics.get("n_known")
+        n_known_prev = last_metrics["n_known"]
         n_seen_prev = last_metrics.get("n_seen", 0)
 
         if self._robots is None:
@@ -579,18 +649,16 @@ class CrawlEngine:
         robots = self._robots
         budgets = with_budgets(robots, world.round_seconds)
 
-        frontier = self.frontier(r - 1)
+        b, adds, log_since = self._since_base(r - 1)
+        frontier = self._frontier(b, adds, log_since)
         eligible = frontier.filter(F.col("next_round") <= r)
         if halted:
             eligible = eligible.filter(~F.col("host").isin(sorted(halted)))
 
-        hint = None if n_known_prev is None else max(0, n_known_prev - n_seen_prev)
+        hint = max(0, n_known_prev - n_seen_prev)
         sel = select_round(eligible, budgets, cfg.salt_threshold, hint)
-        n_parts = cfg.fetch_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
         fetched = (
-            sel.repartition(n_parts, "canonical_url")
+            sel.repartition(_shuffle_partitions(spark), "canonical_url")
             .mapInPandas(make_fetch_stage(world), schemas.FETCHED)
             .cache()
         )
@@ -620,10 +688,11 @@ class CrawlEngine:
         # the exact anti-join backstop keys on (url_hash, canonical_url):
         # the hash co-partitions cheaply, the URL string makes 64-bit
         # collisions unable to drop a distinct new URL at 10^10 scale
-        known_hashes = self.known(r - 1).select(
+        known = _union([store.read_snapshot(spark, "known", b), adds], ["canonical_url"])
+        known_hashes = known.select(
             url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url"
         )
-        use_bloom = n_known_prev is not None and n_known_prev >= cfg.bloom_min_known
+        use_bloom = n_known_prev >= cfg.bloom_min_known
         shards, bloom_info, bloom_meta = self._maintain_bloom(
             r, known_hashes, use_bloom, last_metrics
         )
@@ -727,9 +796,12 @@ class CrawlEngine:
         # distinct output dirs — submit them concurrently so the small
         # fetch_log/known writes ride the image job's ramp-up and tail
         # instead of serializing after it. infos keeps the historical
-        # [fetch_log, bloom, known, images] commit order.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # [fetch_log, bloom, known, images] commit order. If one write
+        # fails, the pool still waits for its siblings and result() then
+        # re-raises before commit_round: the finished sibling dirs are
+        # never listed in _commits.json, so readers ignore them, and the
+        # retried round overwrites them (write mode "overwrite") — the
+        # same at-most-once commit that makes a crash mid-round safe.
         jobs: list[tuple[str, object]] = [
             ("fetch_log", lambda: store.write_delta(log, "fetch_log", r))
         ]
@@ -754,10 +826,7 @@ class CrawlEngine:
         mark("delta_writes")
 
         n_new = sum(new_per_host.values())
-        n_known = (n_new if n_known_prev is None else n_known_prev + n_new)
-        if n_known_prev is None:
-            # first round after init: count the seed once
-            n_known = self.known(0).count() + n_new
+        n_known = n_known_prev + n_new
 
         n_dirty = None  # known-base buckets rewritten (compaction rounds only)
         n_dirty_f = None  # frontier-base buckets rewritten
@@ -779,175 +848,54 @@ class CrawlEngine:
                 .drop("c_attempts", "c_next_round")
                 .unionByName(new_entries)
             )
-            # frontier_base: INCREMENTAL — every frontier mutation flows
-            # through exactly two delta tables (fetch_log: removals +
-            # captcha overrides; known: additions), so the buckets that
-            # changed since the previous base are precisely the buckets
+            # Both bases are INCREMENTAL. frontier_base: every frontier
+            # mutation flows through exactly two delta tables (fetch_log:
+            # removals + captcha overrides; known: additions), so the
+            # buckets that changed since base b are precisely the buckets
             # some URL in those deltas (plus this round's in-memory
-            # fetched/new_entries) hashes into. Rewrite those, carry
-            # every clean bucket forward by reference, and DROP the
-            # manifest entry of a dirty bucket that went empty (the
-            # frontier shrinks — removal-only buckets must not inherit).
-            # Rewrite volume ∝ touched-bucket rows, not |frontier|; the
-            # range-partitioned-per-bucket sort keeps rowgroup stats for
-            # the north_rule's range-pruned frontier reads.
-            b_prev_f = store.latest_snapshot_round("frontier_base", r - 1)
-            prev_f = (
-                store.snapshot_info("frontier_base", b_prev_f)
-                if b_prev_f is not None
+            # fetched/new_entries) hashes into. known base: append-only,
+            # so its dirty buckets are those the pending known rows hash
+            # into. Rewrite volume ∝ dirty-bucket rows, not |frontier| or
+            # |known|; known() still reads O(compact_every) dirs via the
+            # manifest.
+            prev_f = store.snapshot_info("frontier_base", b)
+            prev_k = store.snapshot_info("known", b)
+            # n_new > 0 matches the known delta-write condition above; the
+            # pending rows feed both the dirty-bucket discovery and the
+            # merge write, so they are cached (each extra Spark job at a
+            # small world is pure fixed cost)
+            pend = _union([adds] + ([new_entries] if n_new > 0 else []), KNOWN_COLS)
+            probe = _union([fetched, log_since], ["canonical_url"]).select(
+                F.lit("f").alias("t"),
+                self._bucket(url_hash(F.col("canonical_url"))).alias("b"),
+            )
+            if pend is not None:
+                pend = pend.withColumn(
+                    BUCKET_COL, self._bucket(url_hash(F.col("canonical_url")))
+                ).cache()
+                probe = probe.unionByName(
+                    pend.select(F.lit("k").alias("t"), F.col(BUCKET_COL).alias("b"))
+                )
+            # ONE dirty-bucket discovery job for both bases; an addition
+            # dirties the frontier base as well as the known base
+            tagged = probe.distinct().collect()
+            dirty_k = sorted(int(x["b"]) for x in tagged if x["t"] == "k")
+            dirty_f = sorted({int(x["b"]) for x in tagged})
+            n_dirty_f, n_dirty = len(dirty_f), len(dirty_k)
+            infos.append(
+                self._write_buckets(fr_next, "frontier_base", r, prev_f, dirty_f)
+            )
+            prev_rows = (
+                store.read_snapshot_buckets(spark, "known", b, dirty_k)
+                if dirty_k
                 else None
             )
-            # known-side pending rows (folded further below) — built
-            # HERE and cached because they feed both the dirty-bucket
-            # discovery and the merge write (round-6 compaction-cost
-            # trim: each extra Spark job at a small world is pure fixed
-            # cost, 2.5-5 s per compaction round measured in round 5)
-            b_prev = store.latest_snapshot_round("known", r - 1)
-            prev_info = (
-                store.snapshot_info("known", b_prev) if b_prev is not None else None
+            infos.append(
+                self._write_buckets(
+                    _union([pend, prev_rows], KNOWN_COLS), "known", r, prev_k, dirty_k
+                )
             )
-            if prev_info is not None and "manifest" in prev_info:
-                prev_manifest = dict(prev_info["manifest"])
-                from_r = b_prev + 1
-            else:
-                # no bucketed base yet: deltas 0..r-1 ARE the complete
-                # membership (snapshots only optimize reads), so fold
-                # everything once into bucketed form
-                prev_info, prev_manifest, from_r = None, {}, 0
-            pending = store.read_deltas(spark, "known", r - 1, from_round=from_r)
-            if n_new > 0:  # matches the delta-write condition above
-                sel_new = new_entries.select(*KNOWN_COLS)
-                pending = (
-                    sel_new
-                    if pending is None
-                    else pending.select(*KNOWN_COLS).unionByName(sel_new)
-                )
-            pend = (
-                None
-                if pending is None
-                else pending.withColumn(
-                    "__kb", self._kb(url_hash(F.col("canonical_url")))
-                ).cache()
-            )
-            dirty_k: list[int] | None = None
-            if prev_f is not None and "manifest" in prev_f:
-                touched = fetched.select("canonical_url")
-                for tbl in ("fetch_log", "known"):
-                    d = store.read_deltas(
-                        spark, tbl, r - 1, from_round=b_prev_f + 1
-                    )
-                    if d is not None:
-                        touched = touched.unionByName(d.select("canonical_url"))
-                if n_new > 0:
-                    touched = touched.unionByName(
-                        new_entries.select("canonical_url")
-                    )
-                # ONE dirty-bucket discovery job for BOTH bases: the
-                # frontier's touched URLs and the known pending rows are
-                # tagged, bucketed with each table's own modulus, and
-                # collected together — was two separate collect jobs
-                tf = touched.select(
-                    F.lit("f").alias("t"),
-                    self._fb(url_hash(F.col("canonical_url"))).alias("b"),
-                )
-                probe = (
-                    tf
-                    if pend is None
-                    else tf.unionByName(
-                        pend.select(
-                            F.lit("k").alias("t"), F.col("__kb").alias("b")
-                        )
-                    )
-                )
-                tagged = probe.distinct().collect()
-                dirty_f = sorted(int(x["b"]) for x in tagged if x["t"] == "f")
-                dirty_k = sorted(int(x["b"]) for x in tagged if x["t"] == "k")
-                n_dirty_f = len(dirty_f)
-                if not dirty_f:
-                    infos.append({**prev_f})
-                else:
-                    fb_dirty = (
-                        fr_next.withColumn(
-                            "__fb", self._fb(url_hash(F.col("canonical_url")))
-                        )
-                        .filter(F.col("__fb").isin(dirty_f))
-                        .withColumn("__h", url_hash(F.col("canonical_url")))
-                        .repartition(max(1, n_dirty_f), "__fb")
-                        .sortWithinPartitions("__fb", "__h")
-                        .drop("__h")
-                    )
-                    infos.append(
-                        store.write_bucketed_snapshot(
-                            fb_dirty,
-                            "frontier_base",
-                            r,
-                            "__fb",
-                            inherit=prev_f["manifest"],
-                            dirty=dirty_f,
-                        )
-                    )
-            else:
-                # first compaction after init (round-0 base is a plain
-                # byte-copy): fold the whole frontier into bucketed form
-                n_dirty_f = cfg.frontier_buckets
-                fb_all = (
-                    fr_next.withColumn(
-                        "__fb", self._fb(url_hash(F.col("canonical_url")))
-                    )
-                    .withColumn("__h", url_hash(F.col("canonical_url")))
-                    .repartition(max(1, cfg.frontier_buckets), "__fb")
-                    .sortWithinPartitions("__fb", "__h")
-                    .drop("__h")
-                )
-                infos.append(
-                    store.write_bucketed_snapshot(
-                        fb_all, "frontier_base", r, "__fb"
-                    )
-                )
-            # known_base: same cadence, INCREMENTAL — the membership
-            # set lives hash-bucketed by pmod(url_hash, known_buckets)
-            # behind a per-bucket manifest; a compaction folds the
-            # pending deltas into ONLY the buckets they touch and
-            # carries every clean bucket forward by reference (zero
-            # bytes). Rewrite volume ∝ dirty-bucket rows, not |known|;
-            # known() still reads O(compact_every) dirs via the
-            # manifest. (pend/prev_info/dirty_k built above, shared
-            # with the frontier-base dirty discovery.)
-            if pend is None:
-                # nothing new since the last base: advance the base
-                # round by carrying the manifest forward — no write job
-                infos.append({**prev_info, "path": prev_info["path"]})
-                n_dirty = 0
-            else:
-                if dirty_k is None:
-                    # frontier side was a first-fold (no combined job)
-                    dirty_k = sorted(
-                        int(row["__kb"])
-                        for row in pend.select("__kb").distinct().collect()
-                    )
-                n_dirty = len(dirty_k)
-                prev_paths = [
-                    prev_manifest[str(kb_id)]
-                    for kb_id in dirty_k
-                    if str(kb_id) in prev_manifest
-                ]
-                merged = pend
-                if prev_paths:
-                    prev_rows = spark.read.parquet(*prev_paths).withColumn(
-                        "__kb", self._kb(url_hash(F.col("canonical_url")))
-                    )
-                    merged = merged.unionByName(prev_rows)
-                merged = (
-                    merged.withColumn("__h", url_hash(F.col("canonical_url")))
-                    .repartition(max(1, n_dirty), "__kb")
-                    .sortWithinPartitions("__kb", "__h")  # rowgroup stats
-                    .drop("__h")
-                )
-                infos.append(
-                    store.write_bucketed_snapshot(
-                        merged, "known", r, "__kb", inherit=prev_manifest
-                    )
-                )
+            if pend is not None:
                 pend.unpersist()
             mark("compaction")
 
@@ -1003,7 +951,7 @@ class CrawlEngine:
             )
         )
         refetched = missing.repartition(
-            cfg.fetch_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")),
+            _shuffle_partitions(spark),
             "canonical_url",
         ).mapInPandas(make_fetch_stage(world), schemas.FETCHED)
         images = (

@@ -186,7 +186,3 @@ def phash64(img: np.ndarray) -> int:
     bits[1:] = vals > med
     word = int.from_bytes(np.packbits(bits).tobytes(), "big")
     return word - (1 << 64) if word >= (1 << 63) else word
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")

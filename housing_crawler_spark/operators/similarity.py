@@ -51,46 +51,3 @@ def iterative_relaxation(
         return RelaxationResult(df, df.count(), -1)
     finally:
         cached.unpersist()
-
-
-def price_distance_recency_grid(
-    box_sizes=(0.5, 1.0, 2.0, 4.0, 8.0),
-    price_pcts=(0.10, 0.20, 0.35, 0.50),
-    recency_days=(7, 14, 30, 60, 120, 365),
-) -> list[tuple]:
-    """The reference's 5x4x6 widening grid, tightest-first
-    (app.py:1236-1270)."""
-    return [
-        (b, p, d) for d in recency_days for p in price_pcts for b in box_sizes
-    ]
-
-
-def box_predicate(
-    lat_col: str,
-    lon_col: str,
-    price_col: str,
-    ts_col: str,
-    probe_lat: float,
-    probe_lon: float,
-    probe_price: float,
-    now: str,
-):
-    """Builds predicate_for() for the housing-style search: geodesic box
-    (meters→degrees cos-corrected, reference utils.py:1039-1053), ±price
-    window, recency cutoff."""
-    import math
-
-    def pred(params) -> Column:
-        box_km, price_pct, days = params
-        dlat = box_km / 111.0
-        dlon = box_km / (111.0 * max(0.1, math.cos(math.radians(probe_lat))))
-        return (
-            F.col(lat_col).between(probe_lat - dlat, probe_lat + dlat)
-            & F.col(lon_col).between(probe_lon - dlon, probe_lon + dlon)
-            & F.col(price_col).between(
-                probe_price * (1 - price_pct), probe_price * (1 + price_pct)
-            )
-            & (F.col(ts_col) >= F.date_sub(F.lit(now).cast("date"), days))
-        )
-
-    return pred

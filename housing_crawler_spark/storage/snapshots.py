@@ -14,6 +14,10 @@ Layout:
       _commits.json                     # [{round, tables, ts? no — no clock}, ...]
       <table>/snap-000007/*.parquet     # full state of <table> at round 7
       <table>/delta-000007/*.parquet    # append-only delta for round 7
+      <table>/snap-000007/<col>=<b>/    # bucketed snapshot: one dir per
+                                        # bucket, listed by the commit
+                                        # entry's manifest (which may also
+                                        # point into older snap dirs)
 
 Commit protocol (crash-safe):
 1. write every table's ``snap-``/``delta-`` dir for round r (parquet
@@ -172,6 +176,17 @@ class SnapshotStore:
         )
         return {"table": table, "kind": kind, "path": path, "n_files": len(files)}
 
+    def footer_rows(self, path: str) -> int:
+        """Row count of a written parquet dir, read from the file footers
+        on the driver — no Spark job."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith("_")
+        )
+
     def commit_round(self, rnd: int, table_infos: list[dict], metrics: dict) -> None:
         """Atomically record round ``rnd`` as committed.
 
@@ -221,14 +236,20 @@ class SnapshotStore:
         return spark.read.parquet(*paths) if paths else None
 
     def _delta_paths(self, table: str, from_round: int, up_to_round: int) -> list[str]:
-        """Committed delta dirs for ``table`` in [from_round, up_to]."""
+        """Committed delta dirs for ``table`` in [from_round, up_to]. A
+        delta entry with a bucket manifest owns no dir of its own: its
+        rows are the manifest's bucket dirs (data committed once and
+        shared with a snapshot)."""
         paths = []
         for c in self.commits():
             if not (from_round <= c["round"] <= up_to_round):
                 continue
             for t in c["tables"]:
                 if t["table"] == table and t["kind"] == "delta":
-                    paths.append(t["path"])
+                    if "manifest" in t:
+                        paths.extend(sorted(t["manifest"].values()))
+                    else:
+                        paths.append(t["path"])
         return paths
 
     def read_deltas(
@@ -252,7 +273,9 @@ class SnapshotStore:
         so tests can assert the per-read dir count stays bounded by the
         compaction interval."""
         b = self.latest_snapshot_round(table, up_to_round)
-        snap = self._dir(table, "snap", b) if b is not None else None
+        # a snapshot may live in another table's dir (the round-0 base
+        # is shared), so take the path from its commit entry
+        snap = self.snapshot_info(table, b)["path"] if b is not None else None
         lo = b + 1 if b is not None else 0
         return snap, self._delta_paths(table, lo, up_to_round)
 

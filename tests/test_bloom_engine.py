@@ -68,6 +68,9 @@ def test_incremental_deltas_touch_only_dirty_shards(spark, engines):
         if any(t["table"] == "bloom" for t in c["tables"])
     ]
     assert bloom_rounds, "bloom never activated"
+    # round 0 records n_known, so bloom_min_known=1 turns the filter on
+    # in the very first round
+    assert bloom_rounds[0] == 1, bloom_rounds
     first = bloom_rounds[0]
     covered = {}  # round -> bloom_covers metric
     for c in commits:

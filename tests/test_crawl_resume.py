@@ -147,10 +147,11 @@ def test_rollback_past_known_compaction_resumes_identically(spark, tmp_path):
     other.run(N_ROUNDS)
 
     # N_ROUNDS=6 with compact_every=3 → known snapshots at rounds 3, 6;
-    # roll back to round 2, BEFORE the first known_base
+    # roll back to round 2, BEFORE the first compaction: the latest
+    # known base is then the round-0 seed base
     assert store_b.latest_snapshot_round("known", N_ROUNDS) == 6
     store_b.rollback(2)
-    assert store_b.latest_snapshot_round("known", N_ROUNDS) is None
+    assert store_b.latest_snapshot_round("known", N_ROUNDS) == 0
 
     resumed = CrawlEngine(spark, SnapshotStore(str(tmp_path / "rb")), WORLD, cfg)
     resumed.run(N_ROUNDS)

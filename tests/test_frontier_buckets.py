@@ -47,8 +47,7 @@ DEEP_CFG = EngineConfig(
     bloom_shards=8,
     bloom_min_known=1,
     compact_every=2,
-    known_buckets=8,
-    frontier_buckets=64,
+    buckets=64,
 )
 DEEP_ROUNDS = 6
 
@@ -57,8 +56,7 @@ TINY_CFG = EngineConfig(
     bloom_shards=8,
     bloom_min_known=1,
     compact_every=2,
-    known_buckets=8,
-    frontier_buckets=8,
+    buckets=8,
 )
 TINY_ROUNDS = 7  # drained by ~5; compactions at 2, 4, 6 (6 is a no-op)
 
@@ -88,7 +86,7 @@ def _fb_snaps(store: SnapshotStore):
     out = []
     for c in store.commits():
         if c["round"] == 0:
-            continue  # init byte-copy base, pre-bucketing
+            continue  # round-0 seed base, shared with known (no compaction)
         for t in c["tables"]:
             if t["table"] == "frontier_base" and t["kind"] == "snap":
                 out.append((c["round"], t, c["metrics"]))
@@ -113,7 +111,7 @@ def test_compaction_rewrites_only_touched_buckets(deep):
     # steady state (discovery tapered): far fewer buckets touched than
     # exist, with clean buckets inherited from the PREVIOUS generation
     (_, info4, m4) = snaps[1]
-    assert 0 < m4["frontier_dirty_buckets"] < DEEP_CFG.frontier_buckets
+    assert 0 < m4["frontier_dirty_buckets"] < DEEP_CFG.buckets
     assert any("snap-000002" in p for p in info4["manifest"].values())
 
 

@@ -19,6 +19,7 @@ ads_table_processing.py:285-298,535-576,687-702):
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -26,6 +27,9 @@ import pytest
 from pyspark.sql import functions as F
 
 GOLDEN = "/root/reference/raw_data/202302_ads_OSM.csv"
+pytestmark = pytest.mark.skipif(
+    not os.path.exists(GOLDEN), reason=f"golden reference CSV {GOLDEN} is absent"
+)
 
 RAW_COLS = [
     "id",

@@ -37,7 +37,7 @@ CFG = EngineConfig(
     bloom_shards=8,
     bloom_min_known=1,  # bloom (and with it the pruned backstop) always on
     compact_every=2,  # several compactions within N_ROUNDS
-    known_buckets=8,
+    buckets=8,
 )
 
 
@@ -59,7 +59,7 @@ def plain(spark, tmp_path_factory) -> CrawlEngine:
     return _run(
         spark,
         str(tmp_path_factory.mktemp("kplain")),
-        EngineConfig(bloom_min_known=10**12, compact_every=2, known_buckets=8),
+        EngineConfig(bloom_min_known=10**12, compact_every=2, buckets=8),
     )
 
 
@@ -69,6 +69,8 @@ def plain(spark, tmp_path_factory) -> CrawlEngine:
 def _known_snaps(store: SnapshotStore):
     out = []
     for c in store.commits():
+        if c["round"] == 0:
+            continue  # round-0 seed base, shared with frontier_base
         for t in c["tables"]:
             if t["table"] == "known" and t["kind"] == "snap":
                 out.append((c["round"], t))
@@ -80,8 +82,9 @@ def test_compaction_rewrites_only_dirty_buckets(bucketed):
     assert len(snaps) >= 2, "need at least two compactions"
     for rnd, info in snaps:
         assert "manifest" in info, f"known snap @ r{rnd} not bucketed"
-    # after the first base, every manifest must inherit ≥1 clean-bucket
-    # path from an OLDER snap dir, and rewrite only dirty buckets
+    # from the first compaction on, every manifest must inherit ≥1
+    # clean-bucket path from an OLDER snap dir, and rewrite only dirty
+    # buckets
     for (r0, a), (r1, b) in zip(snaps, snaps[1:]):
         man0, man1 = a["manifest"], b["manifest"]
         inherited = [k for k, p in man1.items() if man0.get(k) == p]
@@ -137,7 +140,7 @@ def test_probe_joins_never_shuffle_the_known_side(spark, bucketed):
 
     store = bucketed.store
     b = store.latest_snapshot_round("known", N_ROUNDS)
-    known_sub = bucketed._known_membership_pruned(b, list(range(CFG.known_buckets)))
+    known_sub = bucketed._known_membership_pruned(b, list(range(CFG.buckets)))
     cand = known_sub.limit(5).unionByName(
         spark.createDataFrame(
             [(123456789, "https://host-0/nowhere")], "url_hash long, canonical_url string"
@@ -182,7 +185,7 @@ def test_shuffle_fallback_backstop_matches_broadcast(spark, tmp_path_factory, bu
             bloom_shards=8,
             bloom_min_known=1,
             compact_every=2,
-            known_buckets=8,
+            buckets=8,
             backstop_broadcast_max=0,
         ),
     )
@@ -201,64 +204,42 @@ def test_shuffle_fallback_backstop_matches_broadcast(spark, tmp_path_factory, bu
     assert a == c
 
 
-def test_resume_from_legacy_unbucketed_store(spark, tmp_path, bucketed):
+def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path):
     """A store written by the PRE-bucketing engine has known snapshots
-    with no bucket manifest. The compaction path always handled that
-    (refolds from deltas); round-5 advice found the per-round probe did
-    NOT — it asserted a manifest and crashed on the first bloom-active
-    round after resume. The probe must instead fall back to a full
-    kb-filtered snapshot read, and the continued run must match the
-    bucketed engine bit-for-bit."""
+    with no bucket manifest. Every base this engine writes is bucketed
+    from round 0, so neither the probe nor the compaction falls back to
+    a full scan: resuming such a store fails with a ValueError naming
+    the format."""
     import json
-    import shutil
 
     root = str(tmp_path / "klegacy")
     eng = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
-    eng.run(3)  # compaction at round 2 wrote a bucketed known snap
 
-    # doctor the store into legacy form: replace the bucketed snap-000002
-    # with a plain (unpartitioned, manifest-less) parquet of the same rows
-    store = eng.store
-    rows = store.read_snapshot(spark, "known", 2)
-    pdf = rows.toPandas()
-    snap_dir = os.path.join(root, "known", "snap-000002")
-    shutil.rmtree(snap_dir)
-    spark.createDataFrame(pdf, rows.schema).coalesce(1).write.parquet(snap_dir)
+    # doctor the round-0 known base into legacy form: a plain
+    # (unpartitioned, manifest-less) parquet of the same rows
+    rows = eng.store.read_snapshot(spark, "known", 0)
+    snap_dir = os.path.join(root, "known", "snap-000000")
+    spark.createDataFrame(rows.toPandas(), rows.schema).coalesce(1).write.parquet(snap_dir)
     commits_path = os.path.join(root, "_commits.json")
     with open(commits_path) as f:
         commits = json.load(f)
-    for c in commits:
-        if c["round"] != 2:
-            continue
-        for t in c["tables"]:
-            if t["table"] == "known" and t["kind"] == "snap":
-                t.pop("manifest", None)
-                t.pop("bucket_col", None)
-                t["path"] = snap_dir
+    for t in commits[0]["tables"]:
+        if t["table"] == "known" and t["kind"] == "snap":
+            t.pop("manifest")
+            t.pop("bucket_col")
+            t["path"] = snap_dir
     with open(commits_path, "w") as f:
         json.dump(commits, f)
 
-    # resume with bloom active: the probe hits the legacy snapshot before
-    # the round-4 compaction re-buckets it
     resumed = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
-    resumed.run(N_ROUNDS)
-    for view in ("seen", "known"):
-        a = {r["canonical_url"] for r in getattr(resumed, view)(N_ROUNDS).collect()}
-        b = {r["canonical_url"] for r in getattr(bucketed, view)(N_ROUNDS).collect()}
-        assert a == b, view
-    la = [
-        tuple(r)
-        for r in resumed.fetch_log(N_ROUNDS).orderBy("round", "host_idx", "rank").collect()
-    ]
-    lb = [
-        tuple(r)
-        for r in bucketed.fetch_log(N_ROUNDS).orderBy("round", "host_idx", "rank").collect()
-    ]
-    assert la == lb
-    # and the next compaction converted the store back to bucketed form
-    b_last = resumed.store.latest_snapshot_round("known", N_ROUNDS)
-    assert "manifest" in resumed.store.snapshot_info("known", b_last)
+    with pytest.raises(ValueError, match="pre-bucketing format"):
+        resumed._known_membership_pruned(0, list(range(CFG.buckets)))
+    # the crawl stops at the first probe or compaction (round 2 at the
+    # latest, compact_every=2) without committing that round
+    with pytest.raises(ValueError, match="pre-bucketing format"):
+        resumed.run(2)
+    assert resumed.store.last_round() < 2
 
 
 def test_bucketed_write_requires_static_overwrite_mode(spark, tmp_path):
@@ -301,3 +282,50 @@ def test_resume_over_bucketed_base_is_bit_identical(spark, tmp_path, bucketed):
         for r in bucketed.fetch_log(N_ROUNDS).orderBy("round", "host_idx", "rank").collect()
     ]
     assert la == lb
+
+
+def test_failed_concurrent_delta_write_leaves_round_uncommitted(
+    spark, tmp_path, monkeypatch, bucketed
+):
+    """The fetch_log/known/images delta writes run concurrently. When
+    the images write of round k fails, its finished siblings' dirs are
+    never committed: the log still ends at k-1, and a resumed engine
+    overwrites them and reproduces the uninterrupted run."""
+    import hashlib
+
+    k = 3
+    root = str(tmp_path / "kfail")
+    eng = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
+    eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
+    eng.run(k - 1)
+
+    real = SnapshotStore.write_delta
+
+    def failing(self, df, table, rnd, options=None):
+        if table == "images" and rnd == k:
+            raise OSError("injected images write failure")
+        return real(self, df, table, rnd, options)
+
+    monkeypatch.setattr(SnapshotStore, "write_delta", failing)
+    with pytest.raises(OSError, match="injected"):
+        eng.run(k)
+    monkeypatch.setattr(SnapshotStore, "write_delta", real)
+    assert [c["round"] for c in eng.store.commits()] == list(range(k))
+    # the sibling write finished but stays invisible
+    assert os.path.isdir(os.path.join(root, "fetch_log", f"delta-{k:06d}"))
+
+    resumed = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
+    resumed.run(k)
+
+    def state(e):
+        log = sorted(tuple(r) for r in e.fetch_log(k).collect())
+        known = sorted(r["canonical_url"] for r in e.known(k).collect())
+        images = sorted(
+            (r["image_id"], hashlib.sha256(bytes(r["bytes"])).hexdigest(), r["phash"])
+            for r in e.images(k).collect()
+        )
+        return log, known, images
+
+    # round k of the uninterrupted run did write images
+    assert bucketed.store.read_deltas(spark, "images", k, from_round=k) is not None
+    assert state(resumed) == state(bucketed)
