@@ -21,16 +21,19 @@ every probe whenever the highest buckets happen to be empty — silently
 voiding the zero-false-negative guarantee (test_bloom.py pins this).
 
 Shards built with an explicit ``n_bits`` are OR-mergeable: per-round
-known deltas rebuild only the shards they touch (``or_shards``) instead
-of re-hashing the full known set — the incremental maintenance the
-engine uses once the bloom activates.
+known deltas rebuild only the shards they touch, and ``or_shards`` ORs
+them into exactly those shards of the current set. The engine keys its
+shards by the known base's bucket modulus and stores them as one more
+bucketed snapshot, so an incremental round rewrites only the dirty
+shards and every clean shard carries forward by manifest reference.
 
-The exact ``left_anti`` join against the seen table remains the
-correctness backstop, keyed on the canonical URL itself (not just its
-64-bit hash — at 10^10 URLs, xxhash64 birthday collisions ~n²/2^65 would
-otherwise silently drop a handful of distinct new URLs). The bloom is
-*only* a work-pruning pre-filter: zero false negatives by construction,
-false positives just cost extra join work.
+The exact ``left_anti`` join against the known set remains the
+correctness backstop (the engine's bucket-pruned one, ``crawl.py``),
+keyed on the canonical URL itself (not just its 64-bit hash — at 10^10
+URLs, xxhash64 birthday collisions ~n²/2^65 would otherwise silently
+drop a handful of distinct new URLs). The bloom is *only* a
+work-pruning pre-filter: zero false negatives by construction, false
+positives just cost extra join work.
 
 Double hashing (Kirsch-Mitzenmacher, public result): bit_i =
 (h1 + i*h2) mod m with h1 = url_hash, h2 = odd mix of h1 — k probes
@@ -179,30 +182,3 @@ def probe(
         .applyInPandas(probe_group, out_schema)
     )
 
-
-def anti_join_seen(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    shards: DataFrame | None,
-    hash_col: str = "url_hash",
-    url_col: str = "canonical_url",
-    n_shards: int | None = None,
-) -> DataFrame:
-    """EXACT candidates-not-in-seen, bloom-accelerated when shards given.
-
-    definitely-new rows skip the shuffle entirely; only the maybe-seen
-    minority pays the exact anti-join (SURVEY §2.3 J1 at scale). The
-    exact join keys on the canonical URL string when both sides carry it
-    (plus the hash, which co-partitions the shuffle cheaply), so a
-    64-bit hash collision can never drop a distinct URL."""
-    if url_col in candidates.columns and url_col in seen.columns:
-        keys = [hash_col, url_col]
-    else:
-        keys = [hash_col]
-    if shards is None:
-        return candidates.join(seen.select(*keys), keys, "left_anti")
-    probed = probe(spark, candidates, shards, hash_col=hash_col, n_shards=n_shards)
-    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return fresh.unionByName(maybe.join(seen.select(*keys), keys, "left_anti"))

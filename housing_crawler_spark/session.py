@@ -15,6 +15,21 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half the
+    host's RAM capped at 48g. A heap larger than the host never comes
+    under GC pressure before the kernel's OOM killer ends the JVM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{max(1, min(48 * 1024, kb // 2048))}m"
+
+
 def spark_session(
     app_name: str = "housing_crawler_spark",
     cores: int | None = None,
@@ -46,7 +61,7 @@ def spark_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

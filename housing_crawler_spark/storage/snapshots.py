@@ -216,12 +216,20 @@ class SnapshotStore:
     def read_snapshot(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
         info = self.snapshot_info(table, rnd)
         if info is not None and "manifest" in info:
-            paths = sorted(info["manifest"].values())
-            if not paths:
-                # fully-drained table: typed empty state via the sidecar
-                return spark.read.parquet(os.path.join(info["path"], "_schema"))
-            return spark.read.parquet(*paths)
+            return self.read_manifest(spark, info)
         return spark.read.parquet(self._dir(table, "snap", rnd))
+
+    def read_manifest(
+        self, spark: SparkSession, info: dict, schema: str | None = None
+    ) -> DataFrame:
+        """Every bucket of a bucketed snapshot's write info (committed or
+        not yet). A known ``schema`` skips the footer-inference job."""
+        paths = sorted(info["manifest"].values())
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        if not paths:
+            # fully-drained table: typed empty state via the sidecar
+            return reader.parquet(os.path.join(info["path"], "_schema"))
+        return reader.parquet(*paths)
 
     def read_snapshot_buckets(
         self, spark: SparkSession, table: str, rnd: int, buckets: list[int]

@@ -1,9 +1,11 @@
-"""J8 backfill: a crawl run whose image stage was disabled is repaired
-by backfill_images to the exact simulator corpus."""
+"""J8 backfill: a crawl whose image rows are missing from the store is
+repaired by backfill_images to the exact simulator corpus."""
 
 from __future__ import annotations
 
 import hashlib
+import json
+import os
 
 from housing_crawler_spark import synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
@@ -16,12 +18,19 @@ N_ROUNDS = 5
 
 def test_backfill_restores_missing_images(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "bf"))
-    eng = CrawlEngine(
-        spark, store, WORLD, EngineConfig(image_stage_enabled=False)
-    )
+    eng = CrawlEngine(spark, store, WORLD, EngineConfig())
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
     eng.run(N_ROUNDS)
-    assert eng.images(N_ROUNDS).count() == 0  # nothing written yet
+    # lose every committed image delta: readers only see what
+    # _commits.json lists, so the crawl now looks image-less
+    commits_path = os.path.join(store.root, "_commits.json")
+    with open(commits_path) as f:
+        commits = json.load(f)
+    for c in commits:
+        c["tables"] = [t for t in c["tables"] if t["table"] != "images"]
+    with open(commits_path, "w") as f:
+        json.dump(commits, f)
+    assert eng.images(N_ROUNDS).count() == 0  # nothing committed
 
     res = eng.backfill_images(N_ROUNDS)
     assert res["n_backfilled_images"] > 0

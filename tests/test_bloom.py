@@ -1,8 +1,7 @@
 """Bloom shards: zero false negatives (hard guarantee), measured FP rate,
-exactness of the accelerated anti-join, explicit shard-count routing
-(empty top shards must not change the probe modulus), no driver collect
-of the shard table, and incremental OR-merge touching only dirty
-shards."""
+explicit shard-count routing (empty top shards must not change the
+probe modulus), no driver collect of the shard table, and incremental
+OR-merge touching only dirty shards."""
 
 from __future__ import annotations
 
@@ -125,22 +124,3 @@ def test_no_false_negatives_and_fp_rate(spark):
     fp = bloom.probe(spark, fresh, shards).filter(F.col("maybe_seen")).count()
     assert fp / 40_000 < 0.05  # 10 bits/key, 4 hashes → ~1% expected
 
-
-def test_accelerated_anti_join_is_exact(spark):
-    seen = spark.range(0, 5_000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    cand = spark.range(2_500, 9_000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.col("id").alias("orig"),
-    )
-    shards = bloom.build_shards(seen, n_shards=4)
-    fast = {
-        r["orig"]
-        for r in bloom.anti_join_seen(spark, cand, seen, shards).collect()
-    }
-    exact = {
-        r["orig"]
-        for r in cand.join(seen, "url_hash", "left_anti").collect()
-    }
-    assert fast == exact == set(range(5_000, 9_000))

@@ -21,7 +21,7 @@ N_ROUNDS = 8
 @pytest.fixture(scope="module")
 def engine(spark, tmp_path_factory):
     store = SnapshotStore(str(tmp_path_factory.mktemp("crawlstore")))
-    eng = CrawlEngine(spark, store, WORLD, EngineConfig(bloom_shards=4))
+    eng = CrawlEngine(spark, store, WORLD, EngineConfig())
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
     eng.run(N_ROUNDS)
     return eng
@@ -138,9 +138,7 @@ def test_salting_and_compaction_do_not_change_selection(spark, tmp_path):
         spark,
         store,
         WORLD,
-        EngineConfig(
-            salt_threshold=2, bloom_shards=2, bloom_min_known=0, compact_every=2
-        ),
+        EngineConfig(salt_threshold=2, bloom_min_known=0, compact_every=2),
     )
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
     eng.run(N_ROUNDS)

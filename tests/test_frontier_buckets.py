@@ -44,7 +44,6 @@ from housing_crawler_spark.storage.snapshots import SnapshotStore
 
 DEEP_WORLD = synth.WorldConfig(n_hosts=6, base_pages=20, round_seconds=13)
 DEEP_CFG = EngineConfig(
-    bloom_shards=8,
     bloom_min_known=1,
     compact_every=2,
     buckets=64,
@@ -53,7 +52,6 @@ DEEP_ROUNDS = 6
 
 TINY_WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
 TINY_CFG = EngineConfig(
-    bloom_shards=8,
     bloom_min_known=1,
     compact_every=2,
     buckets=8,

@@ -34,7 +34,6 @@ from housing_crawler_spark.storage.snapshots import SnapshotStore
 WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
 N_ROUNDS = 8
 CFG = EngineConfig(
-    bloom_shards=8,
     bloom_min_known=1,  # bloom (and with it the pruned backstop) always on
     compact_every=2,  # several compactions within N_ROUNDS
     buckets=8,
@@ -121,7 +120,7 @@ def test_pruned_membership_reads_only_candidate_buckets(spark, bucketed):
     b = store.latest_snapshot_round("known", N_ROUNDS)
     info = store.snapshot_info("known", b)
     want = [0, 3]
-    df = bucketed._known_membership_pruned(b, want)  # no deltas after base
+    df = bucketed._known_membership_pruned(b, None, want)  # no deltas after base
     files = df.inputFiles()
     assert files, "pruned read returned no files"
     allowed = tuple(
@@ -140,7 +139,7 @@ def test_probe_joins_never_shuffle_the_known_side(spark, bucketed):
 
     store = bucketed.store
     b = store.latest_snapshot_round("known", N_ROUNDS)
-    known_sub = bucketed._known_membership_pruned(b, list(range(CFG.buckets)))
+    known_sub = bucketed._known_membership_pruned(b, None, list(range(CFG.buckets)))
     cand = known_sub.limit(5).unionByName(
         spark.createDataFrame(
             [(123456789, "https://host-0/nowhere")], "url_hash long, canonical_url string"
@@ -182,7 +181,6 @@ def test_shuffle_fallback_backstop_matches_broadcast(spark, tmp_path_factory, bu
         spark,
         str(tmp_path_factory.mktemp("kflood")),
         EngineConfig(
-            bloom_shards=8,
             bloom_min_known=1,
             compact_every=2,
             buckets=8,
@@ -234,7 +232,7 @@ def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path):
 
     resumed = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
     with pytest.raises(ValueError, match="pre-bucketing format"):
-        resumed._known_membership_pruned(0, list(range(CFG.buckets)))
+        resumed._since_base(0)
     # the crawl stops at the first probe or compaction (round 2 at the
     # latest, compact_every=2) without committing that round
     with pytest.raises(ValueError, match="pre-bucketing format"):
