@@ -8,59 +8,58 @@ checkpointing).
 State model (designed for a 10^10-URL frontier — nothing is rewritten
 per round):
 
-- ``known``   — append-only: every canonical URL ever admitted to the
-  frontier (seed round 0, then per-round discovered links after robots +
-  membership gates). Because every fetched URL was first admitted,
-  ``seen ⊆ known``, so the J1 discovered-link gate is a single exact
-  check against *known* — bloom-prefiltered, and at scale served by the
-  HASH-BUCKETED known base: membership lives in pmod(url_hash,
-  buckets) buckets behind a per-bucket manifest, compactions fold
-  deltas into ONLY the dirty buckets (clean buckets carried forward by
-  reference, zero bytes), and the per-round backstop reads ONLY the
-  buckets the bloom-surviving candidates hash into, joined broadcast so
-  the known side is never shuffled (test_known_buckets.py).
-- ``seen``    — append-only: URLs fetched (listing/detail/gone) per
-  round. This is the reference's URL-seen membership
-  (crawl_wggesucht.py:297-299).
-- ``captcha`` — append-only: per-round attempt/backoff overrides for
-  URLs whose fetch hit a CAPTCHA (utils.py:109-123 semantics).
-- the FRONTIER itself is derived, never stored per round:
+- ``known``   — one row per canonical URL ever admitted to the frontier
+  (seed round 0, then per-round discovered links after robots +
+  membership gates), carrying a ``seen`` flag and its captcha state.
+  Because every fetched URL was first admitted, ``seen ⊆ known``, so the
+  J1 discovered-link gate is a single exact check against *known* —
+  bloom-prefiltered, and at scale served by the HASH-BUCKETED known
+  base: rows live in pmod(url_hash, buckets) buckets behind a per-bucket
+  manifest, and the per-round backstop reads ONLY the buckets the
+  bloom-surviving candidates hash into, joined broadcast so the known
+  side is never shuffled (test_known_buckets.py).
+- ``fetch_log`` — append-only: the URLs fetched per round. Its
+  non-captcha rows are the reference's URL-seen membership
+  (crawl_wggesucht.py:297-299); its captcha rows are per-round
+  attempt/backoff overrides (utils.py:109-123 semantics).
+- the crawl state after round r is one algebra (``_state``) over the
+  latest known base, the known deltas since and the fetch_log deltas
+  since: a non-captcha fetch sets ``seen``, the latest captcha fetch
+  overrides (attempts, next_round). The FRONTIER is derived, never
+  stored:
 
-      frontier(r) = known(≤r) ANTI seen(≤r), captcha-overridden
+      frontier(r) = state(r) filtered to ~seen
 
-  and every ``compact_every`` rounds it is materialized as a base
-  snapshot so reconstruction reads a bounded number of delta files.
-  The base is hash-bucketed like the known set (same ``buckets``
-  modulus, url_hash-sorted within each bucket for rowgroup range
-  pruning — the north_rule's frontier compaction), and because every
-  frontier mutation flows through the fetch_log/known deltas, a
-  compaction rewrites ONLY the buckets those deltas touch: clean
-  buckets carry forward by reference across generations,
-  removal-emptied buckets drop out of the manifest, and a quiet
-  interval re-commits the old manifest without writing a byte
-  (test_frontier_buckets.py).
+  Every ``compact_every`` rounds the state is materialized as the next
+  known base, so reconstruction reads a bounded number of delta files.
+  A compaction rewrites ONLY the buckets some URL admitted or fetched
+  since the previous base hashes into (url_hash-sorted within each
+  bucket for rowgroup range pruning): clean buckets carry forward by
+  reference across generations, a quiet interval re-commits the old
+  manifest without writing a byte, and since a row only ever gains a
+  flag or an override, no bucket goes empty (test_frontier_buckets.py).
 - round 0 is an ordinary bucketed state: the seeds are written once as
-  a bucketed snapshot whose manifest the known base, the frontier base
-  and known delta 0 all commit, so every probe and compaction reads a
-  manifest and every compaction is incremental. A base without a manifest comes
-  from the pre-bucketing store format and is rejected (ValueError).
+  a bucketed snapshot whose manifest both the known base and known
+  delta 0 commit, so every probe and compaction reads a manifest and
+  every compaction is incremental. A base without a manifest (the
+  pre-bucketing store format) or without the ``seen`` column (the
+  two-base format, which kept the frontier in a second base) is
+  rejected (ValueError).
 - ``bloom`` — the seen-filter's shards, one more bucketed snapshot
   (shard id == base bucket, the same ``buckets`` modulus). Once
   ``n_known`` reaches ``bloom_min_known``, a round re-ORs only the
   shards its fresh known rows hash into and carries every other shard
   forward by manifest reference; below it the link gate is a plain
   exact anti-join.
-- ``fetch_log`` / ``images`` — append-only deltas (per-partition
-  lineage + metrics; the input_hint image table).
+- ``images`` — append-only deltas (the input_hint image table).
 
 A round:
 
     frontier @ r-1 ──eligible──> select_round (politeness budgets,
         salted exact top-B per host, priority = depth/page/card/url)
       ──mapInPandas fetch (Arrow batches; synth mock web)──>
-        ├─ fetch_log delta
-        ├─ seen delta (non-captcha)
-        ├─ captcha delta (attempts+1, eligible after backoff)
+        ├─ fetch_log delta (non-captcha rows: seen; captcha rows:
+        │    attempts+1, eligible after backoff)
         ├─ listing out_links ─canonicalize→ robots gate →
         │    anti-join vs known (bloom pre-filter at scale) →
         │    first-seen-wins dedup → known delta (eligible round r+1)
@@ -84,7 +83,6 @@ from functools import reduce
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from . import schemas, synth
 from .functions.strings import clean_caption
@@ -99,34 +97,31 @@ class EngineConfig:
     salt_threshold: int = 100_000
     bloom_min_known: int = 200_000  # below this an exact anti-join is cheaper
     compact_every: int = 8  # rounds between base materializations
-    buckets: int = 16  # url_hash buckets of the known base, the frontier
-    # base AND the bloom seen-filter's shards (one modulus: both bases
-    # start as the same round-0 snapshot, and a bloom shard is the base
-    # bucket of its keys. At 10^10 URLs: thousands of buckets, so a
-    # probe's candidate set prunes to a small fraction of the table and
-    # a compaction or bloom round rewrites only the buckets some
-    # fetched/admitted/captcha'd URL hashes into; the frontier is
-    # MUTABLE, so a removal-only bucket goes empty rather than
-    # inheriting)
-    backstop_broadcast_max: int = 2_000_000  # maybe-seen rows above which
-    # the exact backstop falls back from broadcast joins to a shuffle
-    # anti-join (a revisit-heavy round can make MOST links bloom
-    # survivors; broadcasting an unbounded candidate set would pressure
-    # the driver, while the fallback still reads only pruned buckets)
+    buckets: int = 16  # url_hash buckets of the known base AND the bloom
+    # seen-filter's shards (one modulus: a bloom shard is the base bucket
+    # of its keys. At 10^10 URLs: thousands of buckets, so a probe's
+    # candidate set prunes to a small fraction of the table and a
+    # compaction or bloom round rewrites only the buckets some
+    # admitted/fetched URL hashes into)
     verify_decode: bool = False  # round-trip decode + invariant check at ingest
 
 
 BLOOM_BITS_PER_KEY = 10
 BLOOM_GROWTH = 4  # headroom factor when sizing/rebuilding shards
+# maybe-seen rows above which the exact backstop falls back from
+# broadcast joins to a shuffle anti-join (a revisit-heavy round can make
+# MOST links bloom survivors; broadcasting an unbounded candidate set
+# would pressure the driver, while the fallback still reads only pruned
+# buckets)
+BACKSTOP_BROADCAST_MAX = 2_000_000
 BUCKET_COL = "__b"  # partition column of the bucketed snapshots
 
-# known/frontier rows share this shape (attempts/next_round only
-# meaningful post-captcha-override)
+# frontier rows (attempts/next_round only meaningful post-captcha-
+# override); a known row is a frontier row plus its ``seen`` flag, and
+# the known base and known deltas share that one shape
 KNOWN_COLS = [f.name for f in schemas.FRONTIER.fields]
-
-CAPTCHA_SCHEMA = (
-    "canonical_url string, attempts int, next_round int, at_round int"
-)
+STATE_COLS = KNOWN_COLS + ["seen"]
+LOG_COLS = ["round", "canonical_url", "kind", "attempts"]  # what _state reads
 
 # image payloads are already codec-compressed; parquet snappy on the
 # binary column is pure overhead AND serializes under concurrency
@@ -270,10 +265,10 @@ class CrawlEngine:
 
     def init_state(self, seed_rows: list[dict], robots_rows: list[dict]) -> None:
         """Round 0: canonicalize + gate + dedup the seed list into ONE
-        bucketed snapshot whose manifest three commit entries share: the
-        frontier base, the known base and known delta 0 (a bucket is
-        shared by reference, exactly as a compaction's ``inherit``
-        does), so the seeds are stored once."""
+        bucketed snapshot whose manifest two commit entries share: the
+        known base and known delta 0 (a bucket is shared by reference,
+        exactly as a compaction's ``inherit`` does), so the seeds are
+        stored once."""
         spark = self.spark
         raw = spark.createDataFrame(
             pd.DataFrame(seed_rows)[
@@ -294,15 +289,15 @@ class CrawlEngine:
             )
             .withColumn("attempts", F.lit(0))
             .withColumn("next_round", F.lit(1))
-            .select(*[F.col(c).cast(types[c]).alias(c) for c in KNOWN_COLS])
+            .select(
+                *[F.col(c).cast(types[c]).alias(c) for c in KNOWN_COLS],
+                F.lit(False).alias("seen"),
+            )
         )
-        base0 = self._write_buckets(
-            known0, "frontier_base", 0, None, list(range(self.cfg.buckets))
-        )
+        base0 = self._write_buckets(known0, 0)
         infos = [
-            {**base0, "table": "known", "kind": "delta"},
+            {**base0, "kind": "delta"},
             base0,
-            {**base0, "table": "known"},
             # a few rows per host: one file, not one per core
             self.store.write_snapshot(robots.coalesce(1), "robots", 0),
         ]
@@ -312,119 +307,138 @@ class CrawlEngine:
     # -- derived state ---------------------------------------------------
 
     def frontier(self, r: int) -> DataFrame:
-        """Reconstruct the frontier as of after round ``r`` (append-only
-        algebra over TWO delta tables: base ∪ known-deltas ANTI
-        fetched-deltas, captcha overrides last-writer-wins — seen and
-        captcha state are both derived views of fetch_log, so a round
-        commits just fetch_log + known + images)."""
-        return self._frontier(*self._since_base(r))
+        """Reconstruct the frontier as of after round ``r``: the crawl
+        state (``_state`` of the known base ∪ known deltas since, under
+        the fetch_log deltas since) filtered to unseen rows — a round
+        commits just fetch_log + known + images."""
+        _, base, adds, log = self._since_base(r)
+        return self._frontier(base, adds, log)
 
-    def _since_base(self, r: int) -> tuple[int, DataFrame | None, DataFrame | None]:
-        """(b, known deltas, fetch_log deltas) after the latest bases at
-        or before round ``r``. The known and frontier bases are written
-        in the same rounds (round 0 and every compaction), so one read of
-        each delta table serves the frontier, the known set and the
-        compaction of a round."""
-        b = self._base_round("known", r)
-        b_f = self._base_round("frontier_base", r)
-        if b_f != b:
-            raise ValueError(
-                f"{self.store.root}: known base @{b} and frontier base @{b_f}"
-                " are out of step"
-            )
+    def _since_base(
+        self, r: int
+    ) -> tuple[int, DataFrame, DataFrame | None, DataFrame | None]:
+        """(b, known base @b, known deltas since, fetch_log deltas since)
+        for the latest known base at or before round ``r``: one read of
+        each serves the frontier, the known set and the compaction of a
+        round."""
+        b = self._base_round(r)
         spark, store = self.spark, self.store
         return (
             b,
+            store.read_snapshot(spark, "known", b),
             store.read_deltas(spark, "known", r, from_round=b + 1),
             store.read_deltas(spark, "fetch_log", r, from_round=b + 1),
         )
 
-    def _frontier(self, b: int, adds: DataFrame | None, log: DataFrame | None) -> DataFrame:
-        base = self.store.read_snapshot(self.spark, "frontier_base", b)
-        cand = base if adds is None else base.unionByName(adds)
-        if log is not None:
-            fetched_urls = log.filter(F.col("kind") != "captcha").select("canonical_url")
-            cand = cand.join(fetched_urls, "canonical_url", "left_anti")
-            capt = log.filter(F.col("kind") == "captcha").select(
-                "canonical_url",
-                (F.col("attempts") + 1).alias("c_attempts"),
-                (
-                    F.col("round") + 1 + F.lit(self.world.captcha_backoff_rounds)
-                ).alias("c_next_round"),
-                F.col("round").alias("at_round"),
-            )
-            w = Window.partitionBy("canonical_url").orderBy(F.desc("at_round"))
-            latest = (
-                capt.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", "at_round")
-            )
-            cand = (
-                cand.join(latest, "canonical_url", "left")
-                .withColumn("attempts", F.coalesce("c_attempts", "attempts"))
-                .withColumn("next_round", F.coalesce("c_next_round", "next_round"))
-                .drop("c_attempts", "c_next_round")
-            )
-        return cand
+    def _state(self, rows: DataFrame, log: DataFrame | None) -> DataFrame:
+        """Apply fetch_log rows to known rows (``STATE_COLS``): a
+        non-captcha fetch sets ``seen``; a captcha fetch at round k sets
+        (attempts, next_round) to (attempts + 1, k + 1 + backoff), the
+        latest round winning. One per-URL aggregate of the log, one
+        join."""
+        if log is None:
+            return rows
+        capt = F.col("kind") == "captcha"
+        events = log.groupBy("canonical_url").agg(
+            F.max(~capt).alias("__fetched"),
+            F.max(
+                F.when(
+                    capt,
+                    F.struct(
+                        "round",
+                        (F.col("attempts") + 1).alias("attempts"),
+                        (
+                            F.col("round") + 1 + F.lit(self.world.captcha_backoff_rounds)
+                        ).alias("next_round"),
+                    ),
+                )
+            ).alias("__capt"),
+        )
+        new = {
+            "attempts": F.coalesce("__capt.attempts", "attempts"),
+            "next_round": F.coalesce("__capt.next_round", "next_round"),
+            "seen": F.col("seen") | F.coalesce("__fetched", F.lit(False)),
+        }
+        return rows.join(events, "canonical_url", "left").select(
+            *[new.get(c, F.col(c)).alias(c) for c in STATE_COLS]
+        )
+
+    def _frontier(
+        self, base: DataFrame, adds: DataFrame | None, log: DataFrame | None
+    ) -> DataFrame:
+        # seen never reverts, so the base's seen rows skip the log join
+        unseen = base.filter(~F.col("seen"))
+        state = self._state(_union([unseen, adds], STATE_COLS), log)
+        return state.filter(~F.col("seen")).select(*KNOWN_COLS)
 
     def known(self, r: int) -> DataFrame:
-        """Full URL-known membership at round ``r``: latest known_base
-        snapshot ∪ deltas since (bounded union-on-read — the round-3
-        verdict's item 5: unioning EVERY delta since round 0 lists
-        10^4 dirs per round at 10^4 rounds)."""
-        return self.store.read_compacted(self.spark, "known", r)
+        """The crawl state after round ``r``: every admitted URL with its
+        seen flag and captcha state, read as the latest known base ∪ the
+        deltas since (bounded union-on-read — the round-3 verdict's item
+        5: unioning EVERY delta since round 0 lists 10^4 dirs per round
+        at 10^4 rounds)."""
+        _, base, adds, log = self._since_base(r)
+        return self._state(_union([base, adds], STATE_COLS), log)
 
     def _bucket(self, col) -> F.Column:
         """Base bucket of a url_hash column (pmod keeps negative xxhash64
         values in range)."""
         return F.pmod(col, F.lit(self.cfg.buckets)).cast("int")
 
-    def _base_round(self, table: str, r: int) -> int:
-        """Round of ``table``'s latest base at or before round ``r``.
-        Every base is bucketed from round 0 on, so one without a
-        manifest can only come from an older store format."""
-        b = self.store.latest_snapshot_round(table, r)
-        info = None if b is None else self.store.snapshot_info(table, b)
-        if info is None or "manifest" not in info:
-            raise ValueError(
-                f"{self.store.root}: no bucketed {table} base at or before"
-                f" round {r}; the store uses the pre-bucketing format (no"
-                " bucket manifest on the base snapshots). Crawl it again"
-                " from init_state into a fresh store."
+    def _base_round(self, r: int) -> int:
+        """Round of the latest known base at or before round ``r``. Every
+        base is bucketed and carries the ``seen`` flag from round 0 on,
+        so a base without either can only come from an older store
+        format."""
+        store = self.store
+        b = store.latest_snapshot_round("known", r)
+        info = None if b is None else store.snapshot_info("known", b)
+        paths = sorted(info["manifest"].values()) if info and "manifest" in info else None
+        if paths is None:
+            fmt = "pre-bucketing format (no bucket manifest on the base snapshots)"
+        elif paths and "seen" not in store.footer_columns(paths[0]):
+            fmt = (
+                "two-base format (a separate frontier base table beside"
+                " known rows with no seen column)"
             )
-        return b
+        else:
+            return b
+        raise ValueError(
+            f"{store.root}: no known base of this engine's layout at or before"
+            f" round {r}; the store uses the {fmt}. Crawl it again from"
+            " init_state into a fresh store."
+        )
 
     def _write_buckets(
         self,
-        rows: DataFrame | None,
-        table: str,
+        rows: DataFrame,
         r: int,
-        prev: dict | None,
-        dirty: list[int],
+        prev: dict | None = None,
+        dirty: list[int] | None = None,
     ) -> dict:
-        """Write the FULL current rows of the ``dirty`` buckets as round
-        ``r``'s snapshot of ``table``, url_hash-sorted within each bucket
-        (rowgroup range stats); every other bucket of ``prev``'s manifest
-        carries forward by reference, and a dirty bucket with no rows
-        drops out. No dirty bucket: re-commit ``prev``, zero bytes."""
-        if not dirty:
-            return dict(prev)
+        """Write ``rows`` — the FULL current rows of the ``dirty`` buckets,
+        every bucket when None (round 0) — as round ``r``'s known base,
+        url_hash-sorted within each bucket (rowgroup range stats); every
+        other bucket of ``prev``'s manifest carries forward by
+        reference."""
         # hash-partitioning by bucket keeps each bucket in ONE task, so
         # one file per bucket; capping the tasks at the session's shuffle
         # parallelism avoids paying the per-task fixed cost once per
         # bucket (the round-0 write covers every bucket)
-        n_tasks = min(len(dirty), _shuffle_partitions(self.spark))
+        n_tasks = min(
+            self.cfg.buckets if dirty is None else len(dirty),
+            _shuffle_partitions(self.spark),
+        )
         out = (
             rows.withColumn("__h", url_hash(F.col("canonical_url")))
             .withColumn(BUCKET_COL, self._bucket(F.col("__h")))
-            .filter(F.col(BUCKET_COL).isin(dirty))
             .repartition(n_tasks, BUCKET_COL)
             .sortWithinPartitions(BUCKET_COL, "__h")
             .drop("__h")
         )
         return self.store.write_bucketed_snapshot(
             out,
-            table,
+            "known",
             r,
             BUCKET_COL,
             inherit=None if prev is None else prev["manifest"],
@@ -483,7 +497,7 @@ class CrawlEngine:
         if known_sub is None:
             return fresh.unionByName(maybe), probed
         keys = ["url_hash", "canonical_url"]
-        if n_maybe > cfg.backstop_broadcast_max:
+        if n_maybe > BACKSTOP_BROADCAST_MAX:
             # candidate flood (revisit-heavy round): a broadcast this big
             # would pressure the driver — shuffle the candidates instead;
             # the known side is STILL only the pruned candidate buckets
@@ -539,7 +553,7 @@ class CrawlEngine:
             # full (re)build, sized with growth headroom so subsequent
             # rounds stay incremental
             want = BLOOM_GROWTH * BLOOM_BITS_PER_KEY * max(1, n_known_prev)
-            # floor at 2^12 bits/shard (matches bloom.build_shards min_bits)
+            # floor at 2^12 bits/shard: the one sizing rule of the shards
             n_bits = 1 << max(12, (want // cfg.buckets).bit_length())
             shards = bloom.build_shards(known_hashes, cfg.buckets, n_bits=n_bits)
             inherit = None
@@ -599,8 +613,8 @@ class CrawlEngine:
         robots = self._robots
         budgets = with_budgets(robots, world.round_seconds)
 
-        b, adds, log_since = self._since_base(r - 1)
-        frontier = self._frontier(b, adds, log_since)
+        b, base, adds, log_since = self._since_base(r - 1)
+        frontier = self._frontier(base, adds, log_since)
         eligible = frontier.filter(F.col("next_round") <= r)
         if halted:
             eligible = eligible.filter(~F.col("host").isin(sorted(halted)))
@@ -612,13 +626,6 @@ class CrawlEngine:
             .mapInPandas(make_fetch_stage(world), schemas.FETCHED)
             .cache()
         )
-        done = fetched.filter(F.col("kind") != "captcha")
-        captcha = fetched.filter(F.col("kind") == "captcha").select(
-            "canonical_url",
-            (F.col("attempts") + 1).alias("attempts"),
-            F.lit(r + 1 + world.captcha_backoff_rounds).alias("next_round"),
-        )
-
         # discovered links: canonicalize → robots → anti-join vs known
         # (seen ⊆ known, so one gate suffices) → first-seen-wins
         links = (
@@ -638,7 +645,7 @@ class CrawlEngine:
         # the exact anti-join backstop keys on (url_hash, canonical_url):
         # the hash co-partitions cheaply, the URL string makes 64-bit
         # collisions unable to drop a distinct new URL at 10^10 scale
-        known = _union([store.read_snapshot(spark, "known", b), adds], ["canonical_url"])
+        known = _union([base, adds], ["canonical_url"])
         known_hashes = known.select(
             url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url"
         )
@@ -663,6 +670,7 @@ class CrawlEngine:
                 "card_idx",
                 F.lit(0).alias("attempts"),
                 F.lit(r + 1).alias("next_round"),
+                F.lit(False).alias("seen"),
             )
             .cache()
         )
@@ -700,7 +708,7 @@ class CrawlEngine:
                     n_listing_by_host.get(row["host"], 0) + row["count"]
                 )
 
-        details = done.filter(F.col("kind") == "detail").withColumn(
+        details = fetched.filter(F.col("kind") == "detail").withColumn(
             "caption", clean_caption(F.col("caption_raw"))
         )
         images = details.select(
@@ -773,74 +781,34 @@ class CrawlEngine:
         n_known = n_known_prev + n_new
 
         n_dirty = None  # known-base buckets rewritten (compaction rounds only)
-        n_dirty_f = None  # frontier-base buckets rewritten
         if r % cfg.compact_every == 0:
-            # round-r deltas aren't committed yet, so build frontier(r)
-            # from the in-memory round algebra instead of the store
-            fr_next = frontier.join(
-                done.select("canonical_url"), "canonical_url", "left_anti"
+            # The base is INCREMENTAL: every state change since base b
+            # flows through the known deltas (admissions) and fetch_log
+            # (seen flags, captcha overrides), round r's still in memory
+            # (new_entries, log), so the buckets that changed are exactly
+            # those some URL in them hashes into. Every such URL is known,
+            # so no dirty bucket is empty. Rewrite volume ∝ dirty-bucket
+            # rows, not |known|; known() still reads O(compact_every) dirs
+            # via the manifest.
+            pend = _union([adds] + ([new_entries] if n_new > 0 else []), STATE_COLS)
+            log_all = _union([log_since, log], LOG_COLS)
+            dirty = sorted(
+                int(x["b"])
+                for x in _union([pend, log_all], ["canonical_url"])
+                .select(self._bucket(url_hash(F.col("canonical_url"))).alias("b"))
+                .distinct()
+                .collect()
             )
-            capt_now = captcha.select(
-                "canonical_url",
-                F.col("attempts").alias("c_attempts"),
-                F.col("next_round").alias("c_next_round"),
-            )
-            fr_next = (
-                fr_next.join(capt_now, "canonical_url", "left")
-                .withColumn("attempts", F.coalesce("c_attempts", "attempts"))
-                .withColumn("next_round", F.coalesce("c_next_round", "next_round"))
-                .drop("c_attempts", "c_next_round")
-                .unionByName(new_entries)
-            )
-            # Both bases are INCREMENTAL. frontier_base: every frontier
-            # mutation flows through exactly two delta tables (fetch_log:
-            # removals + captcha overrides; known: additions), so the
-            # buckets that changed since base b are precisely the buckets
-            # some URL in those deltas (plus this round's in-memory
-            # fetched/new_entries) hashes into. known base: append-only,
-            # so its dirty buckets are those the pending known rows hash
-            # into. Rewrite volume ∝ dirty-bucket rows, not |frontier| or
-            # |known|; known() still reads O(compact_every) dirs via the
-            # manifest.
-            prev_f = store.snapshot_info("frontier_base", b)
-            prev_k = store.snapshot_info("known", b)
-            # n_new > 0 matches the known delta-write condition above; the
-            # pending rows feed both the dirty-bucket discovery and the
-            # merge write, so they are cached (each extra Spark job at a
-            # small world is pure fixed cost)
-            pend = _union([adds] + ([new_entries] if n_new > 0 else []), KNOWN_COLS)
-            probe = _union([fetched, log_since], ["canonical_url"]).select(
-                F.lit("f").alias("t"),
-                self._bucket(url_hash(F.col("canonical_url"))).alias("b"),
-            )
-            if pend is not None:
-                pend = pend.withColumn(
-                    BUCKET_COL, self._bucket(url_hash(F.col("canonical_url")))
-                ).cache()
-                probe = probe.unionByName(
-                    pend.select(F.lit("k").alias("t"), F.col(BUCKET_COL).alias("b"))
+            n_dirty = len(dirty)
+            prev = store.snapshot_info("known", b)
+            if dirty:
+                rows = _union(
+                    [store.read_snapshot_buckets(spark, "known", b, dirty), pend],
+                    STATE_COLS,
                 )
-            # ONE dirty-bucket discovery job for both bases; an addition
-            # dirties the frontier base as well as the known base
-            tagged = probe.distinct().collect()
-            dirty_k = sorted(int(x["b"]) for x in tagged if x["t"] == "k")
-            dirty_f = sorted({int(x["b"]) for x in tagged})
-            n_dirty_f, n_dirty = len(dirty_f), len(dirty_k)
-            infos.append(
-                self._write_buckets(fr_next, "frontier_base", r, prev_f, dirty_f)
-            )
-            prev_rows = (
-                store.read_snapshot_buckets(spark, "known", b, dirty_k)
-                if dirty_k
-                else None
-            )
-            infos.append(
-                self._write_buckets(
-                    _union([pend, prev_rows], KNOWN_COLS), "known", r, prev_k, dirty_k
-                )
-            )
-            if pend is not None:
-                pend.unpersist()
+                infos.append(self._write_buckets(self._state(rows, log_all), r, prev, dirty))
+            else:  # a quiet interval re-commits the old manifest
+                infos.append(dict(prev))
             mark("compaction")
 
         metrics = {
@@ -857,7 +825,6 @@ class CrawlEngine:
             "timings": timings,
             **bloom_meta,
             **({} if n_dirty is None else {"known_dirty_buckets": n_dirty}),
-            **({} if n_dirty_f is None else {"frontier_dirty_buckets": n_dirty_f}),
         }
         store.commit_round(r, infos, metrics)
         fetched.unpersist()

@@ -15,17 +15,21 @@ passes through the driver. A ``sub_splits`` fan-out key keeps task
 parallelism above the shard count without duplicating work (each
 (shard, sub) task still reads one bitset).
 
-The shard count is threaded EXPLICITLY from build to probe (stored in
-every shard row): inferring it from ``max(shard_id)+1`` would misroute
-every probe whenever the highest buckets happen to be empty — silently
-voiding the zero-false-negative guarantee (test_bloom.py pins this).
+The geometry is EXPLICIT: the caller passes the shard count and the
+bits per shard to ``build_shards`` and the same shard count to
+``probe`` (both required; the engine sizes the bits, with a 2^12-bit
+floor). Inferring the shard count from ``max(shard_id)+1`` would
+misroute every probe whenever the highest buckets happen to be empty —
+silently voiding the zero-false-negative guarantee (test_bloom.py pins
+this).
 
-Shards built with an explicit ``n_bits`` are OR-mergeable: per-round
-known deltas rebuild only the shards they touch, and ``or_shards`` ORs
-them into exactly those shards of the current set. The engine keys its
-shards by the known base's bucket modulus and stores them as one more
-bucketed snapshot, so an incremental round rewrites only the dirty
-shards and every clean shard carries forward by manifest reference.
+Every shard has the same fixed width, so shards are OR-mergeable:
+per-round known deltas rebuild only the shards they touch, and
+``or_shards`` ORs them into exactly those shards of the current set.
+The engine keys its shards by the known base's bucket modulus and
+stores them as one more bucketed snapshot, so an incremental round
+rewrites only the dirty shards and every clean shard carries forward
+by manifest reference.
 
 The exact ``left_anti`` join against the known set remains the
 correctness backstop (the engine's bucket-pruned one, ``crawl.py``),
@@ -60,33 +64,21 @@ def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
 
 
 def build_shards(
-    seen: DataFrame,
-    n_shards: int = 8,
-    bits_per_key: int = 10,
-    n_hashes: int = 4,
-    min_bits: int = 1 << 12,
-    n_bits: int | None = None,
+    seen: DataFrame, n_shards: int, n_bits: int, n_hashes: int = 4
 ) -> DataFrame:
-    """seen(url_hash long) → one bitset row per non-empty shard.
-
-    With explicit ``n_bits`` every shard gets the same fixed width
-    (required for OR-merging incremental deltas); otherwise each shard
-    sizes itself from its own key count (one-shot builds)."""
+    """seen(url_hash long) → one ``n_bits``-wide bitset row per non-empty
+    shard (one fixed width for every shard, so incremental deltas
+    OR-merge)."""
 
     def one_shard(key, pdf: pd.DataFrame):
-        n = len(pdf)
-        if n_bits is not None:
-            bits = int(n_bits)
-        else:
-            bits = max(min_bits, 1 << int(np.ceil(np.log2(max(1, n * bits_per_key)))))
-        arr = np.zeros(bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(np.int64), bits, n_hashes)
+        arr = np.zeros(n_bits // 8, dtype=np.uint8)
+        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
         np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
         return pd.DataFrame(
             {
                 "shard_id": [int(key[0])],
                 "n_shards": [n_shards],
-                "n_bits": [bits],
+                "n_bits": [n_bits],
                 "n_hashes": [n_hashes],
                 "bitset": [arr.tobytes()],
             }
@@ -129,9 +121,9 @@ def probe(
     spark: SparkSession,
     candidates: DataFrame,
     shards: DataFrame,
+    n_shards: int,
     hash_col: str = "url_hash",
     out_col: str = "maybe_seen",
-    n_shards: int | None = None,
     sub_splits: int = 4,
 ) -> DataFrame:
     """Add ``maybe_seen`` to candidates. False ⇒ definitely not in seen.
@@ -140,14 +132,8 @@ def probe(
     cogroup with the shard rows — no driver collect, no broadcast of the
     shard table; each task touches only its own shard's bitset.
 
-    ``n_shards`` MUST equal the build-time shard count; pass it (the
-    engine knows its config) or it is read from the shard rows
-    themselves (one 1-row aggregate job) — never inferred from which
-    shard ids happen to be present."""
-    if n_shards is None:
-        row = shards.select(F.max("n_shards").alias("n")).first()
-        n_shards = int(row["n"]) if row and row["n"] is not None else 1
-
+    ``n_shards`` MUST equal the build-time shard count — it is never
+    inferred from which shard ids happen to be present."""
     sid = F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
     sub = F.pmod(F.shiftrightunsigned(F.col(hash_col), 13), F.lit(sub_splits)).cast("int")
     cand = candidates.withColumn("__sid", sid).withColumn("__sub", sub)

@@ -90,12 +90,10 @@ class SnapshotStore:
         compaction's write volume is ∝ dirty-bucket rows, not |table|.
 
         ``dirty`` (when given) lists every bucket the caller knows
-        changed. A dirty bucket that ends up with ZERO current rows
-        writes no partition dir, and for an append-only table that
-        can't happen — but for a MUTABLE table (the frontier: fetched
-        rows leave it) a removal-only bucket must become empty, not
-        silently inherit its old rows, so its inherited manifest entry
-        is dropped. Append-only callers may omit ``dirty``.
+        changed, and each must come out with rows: no table this store
+        holds loses rows, so a dirty bucket that writes no partition dir
+        is a caller bug and raises (ValueError) rather than silently
+        inheriting its old rows or dropping out of the manifest.
 
         Old snap dirs stay referenced by later manifests until every
         bucket has gone dirty — a vacuum must walk manifest
@@ -121,28 +119,30 @@ class SnapshotStore:
         (
             df_dirty.write.mode("overwrite").partitionBy(bucket_col).parquet(path)
         )
-        manifest = dict(inherit or {})
-        for b in dirty or ():
-            manifest.pop(str(b), None)
         prefix = f"{bucket_col}="
-        dirty_keys = {str(b) for b in dirty} if dirty is not None else None
-        for d in sorted(os.listdir(path)):
-            if d.startswith(prefix):
-                key = d[len(prefix):]
-                # when the caller declared the dirty set, never adopt a
-                # dir outside it (second line of defense vs stale dirs)
-                if dirty_keys is not None and key not in dirty_keys:
-                    continue
-                manifest[key] = os.path.join(path, d)
+        written = {
+            d[len(prefix):]: os.path.join(path, d)
+            for d in sorted(os.listdir(path))
+            if d.startswith(prefix)
+        }
+        if dirty is not None:
+            keys = {str(b) for b in dirty}
+            missing = sorted(keys - written.keys())
+            if missing:
+                raise ValueError(
+                    f"{table}@{rnd}: declared dirty buckets {missing} came out with no rows"
+                )
+            # never adopt a dir outside the declared dirty set (second
+            # line of defense vs stale dirs)
+            written = {k: p for k, p in written.items() if k in keys}
+        manifest = {**(inherit or {}), **written}
         if not manifest:
-            # zero-row schema sidecar: a mutable table can drain
-            # completely (every manifest entry dropped), and an empty
-            # partitioned write leaves no parquet footers to infer a
-            # schema from — read_snapshot falls back to this when the
-            # manifest is empty. Written ONLY in that case (round-6
-            # compaction-cost trim: the sidecar is one whole Spark job,
-            # and a non-empty manifest never reads it). "_"-prefixed
-            # dirs are invisible to Spark's dir-level parquet listing.
+            # zero-row schema sidecar, kept because IncrementalDeduper's
+            # zero-document first round commits an empty manifest: an
+            # empty partitioned write leaves no footer to infer a schema
+            # from, so read_snapshot falls back to this. Written ONLY
+            # then (it costs a whole Spark job); "_"-prefixed dirs are
+            # invisible to Spark's dir-level parquet listing.
             (
                 df_dirty.drop(bucket_col)
                 .limit(0)
@@ -187,6 +187,16 @@ class SnapshotStore:
             if f.endswith(".parquet") and not f.startswith("_")
         )
 
+    def footer_columns(self, path: str) -> list[str]:
+        """Column names of a written parquet dir, read from one file
+        footer on the driver — no Spark job."""
+        import pyarrow.parquet as pq
+
+        name = min(
+            f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
+        )
+        return pq.read_schema(os.path.join(path, name)).names
+
     def commit_round(self, rnd: int, table_infos: list[dict], metrics: dict) -> None:
         """Atomically record round ``rnd`` as committed.
 
@@ -227,7 +237,8 @@ class SnapshotStore:
         paths = sorted(info["manifest"].values())
         reader = spark.read if schema is None else spark.read.schema(schema)
         if not paths:
-            # fully-drained table: typed empty state via the sidecar
+            # a snapshot written with zero rows: typed empty state via the
+            # sidecar
             return reader.parquet(os.path.join(info["path"], "_schema"))
         return reader.parquet(*paths)
 
@@ -277,31 +288,15 @@ class SnapshotStore:
         self, table: str, up_to_round: int
     ) -> tuple[str | None, list[str]]:
         """(latest snapshot dir or None, delta dirs after it) — what a
-        read_compacted of ``table`` at ``up_to_round`` touches. Exposed
-        so tests can assert the per-read dir count stays bounded by the
-        compaction interval."""
+        read of ``table``'s state at ``up_to_round`` (latest snapshot ∪
+        deltas since) touches. Exposed so tests can assert the per-read
+        dir count stays bounded by the compaction interval."""
         b = self.latest_snapshot_round(table, up_to_round)
-        # a snapshot may live in another table's dir (the round-0 base
-        # is shared), so take the path from its commit entry
+        # a carried-forward snapshot points into an older round's dir,
+        # so take the path from its commit entry
         snap = self.snapshot_info(table, b)["path"] if b is not None else None
         lo = b + 1 if b is not None else 0
         return snap, self._delta_paths(table, lo, up_to_round)
-
-    def read_compacted(
-        self, spark: SparkSession, table: str, up_to_round: int
-    ) -> DataFrame | None:
-        """State of ``table`` at ``up_to_round`` as latest snapshot ∪
-        deltas since. With periodic snapshots this bounds the parquet
-        dirs listed per read to the compaction interval — without one,
-        a 10^4-round run lists 10^4 delta dirs per round (a metadata /
-        small-file bottleneck, not a data-volume one)."""
-        b = self.latest_snapshot_round(table, up_to_round)
-        if b is None:
-            deltas = self._delta_paths(table, 0, up_to_round)
-            return spark.read.parquet(*deltas) if deltas else None
-        base = self.read_snapshot(spark, table, b)  # manifest-aware
-        deltas = self._delta_paths(table, b + 1, up_to_round)
-        return base.unionByName(spark.read.parquet(*deltas)) if deltas else base
 
     # -- rollback ----------------------------------------------------------
 

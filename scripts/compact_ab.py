@@ -73,11 +73,6 @@ def run_world(spark, root: str, rounds: int, hosts: int, pages: int, compact_eve
         "dirty_buckets_per_compaction": [
             m["known_dirty_buckets"] for m in metrics if "known_dirty_buckets" in m
         ],
-        "frontier_dirty_per_compaction": [
-            m["frontier_dirty_buckets"]
-            for m in metrics
-            if "frontier_dirty_buckets" in m
-        ],
     }
 
 

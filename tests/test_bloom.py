@@ -1,6 +1,6 @@
 """Bloom shards: zero false negatives (hard guarantee), measured FP rate,
-explicit shard-count routing (empty top shards must not change the
-probe modulus), no driver collect of the shard table, and incremental
+explicit geometry (empty top shards must not change the probe
+modulus), no driver collect of the shard table, and incremental
 OR-merge touching only dirty shards."""
 
 from __future__ import annotations
@@ -24,21 +24,21 @@ def test_probe_empty_top_shards_explicit_modulus(spark):
     )
     # keep only keys whose shard id < 5 → shards 5,6,7 emit no row
     low = base.filter(F.pmod(F.col("url_hash"), F.lit(n_shards)) < 5)
-    shards = bloom.build_shards(low, n_shards=n_shards)
+    shards = bloom.build_shards(low, n_shards=n_shards, n_bits=1 << 17)
     assert shards.agg(F.max("shard_id")).first()[0] < 5
-    # n_shards travels in the rows themselves — no explicit arg needed
-    probed = bloom.probe(spark, low, shards)
+    # the build-time modulus is passed, never inferred from the rows
+    probed = bloom.probe(spark, low, shards, n_shards=n_shards)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_probe_no_driver_collect(spark, monkeypatch):
     """The probe path must never collect the shard table to the driver
-    (12.5 GB at the 10^10 design point). With n_shards passed explicitly
-    the whole probe is a co-partitioned cogroup."""
+    (12.5 GB at the 10^10 design point): the whole probe is a
+    co-partitioned cogroup."""
     seen = spark.range(0, 10_000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    shards = bloom.build_shards(seen, n_shards=4)
+    shards = bloom.build_shards(seen, n_shards=4, n_bits=1 << 15)
 
     def boom(self, *a, **k):  # pragma: no cover - fires only on bug
         raise AssertionError("driver collect inside bloom.probe")
@@ -114,13 +114,14 @@ def test_no_false_negatives_and_fp_rate(spark):
     seen = spark.range(0, 20_000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    shards = bloom.build_shards(seen, n_shards=8)
-    probed = bloom.probe(spark, seen, shards)
+    # 2,500 keys per shard: 2^15 bits is >10 bits/key
+    shards = bloom.build_shards(seen, n_shards=8, n_bits=1 << 15)
+    probed = bloom.probe(spark, seen, shards, n_shards=8)
     assert probed.filter(~F.col("maybe_seen")).count() == 0  # zero FN
 
     fresh = spark.range(100_000, 140_000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    fp = bloom.probe(spark, fresh, shards).filter(F.col("maybe_seen")).count()
+    fp = bloom.probe(spark, fresh, shards, n_shards=8).filter(F.col("maybe_seen")).count()
     assert fp / 40_000 < 0.05  # 10 bits/key, 4 hashes → ~1% expected
 

@@ -1,19 +1,19 @@
-"""Hash-bucketed frontier_base maintenance (round-5: the frontier half
-of the incremental-compaction story — round 4 closed it for the known
-set, but the frontier rewrite was still O(|frontier|) per cycle).
+"""The known base as the MUTABLE crawl state: the frontier lives in it
+as the rows whose ``seen`` flag is false, so compaction maintains one
+bucketed base instead of a known base plus a frontier base.
 
-Unlike ``known``, the frontier is MUTABLE: fetched URLs leave it,
-captcha'd URLs mutate in place, admitted URLs join. Three guarantees:
+Fetched URLs flip ``seen``, captcha'd URLs mutate in place, admitted
+URLs join. Three guarantees:
 
-(a) INCREMENTAL COMPACTION — a frontier_base compaction rewrites only
-    the buckets some fetched/admitted/captcha'd URL hashes into since
-    the previous base; clean buckets carry forward by reference across
-    MULTIPLE snapshot generations, and a compaction with NO frontier
+(a) INCREMENTAL COMPACTION — a known-base compaction rewrites only the
+    buckets some fetched/admitted/captcha'd URL hashes into since the
+    previous base; clean buckets carry forward by reference across
+    MULTIPLE snapshot generations, and a compaction with NO state
     changes re-commits the previous manifest verbatim (zero writes).
-(b) REMOVAL SAFETY — a dirty bucket whose rows were all removed goes
-    EMPTY (manifest entry dropped), never inherits its old rows; a
-    fully-drained frontier still reads back as a typed empty DataFrame
-    via the zero-row ``_schema`` sidecar.
+(b) NO EMPTY BUCKETS — a row only ever gains a flag or an override, so
+    every dirty bucket has rows; a bucketed write where a declared
+    dirty bucket comes out empty raises instead of dropping or
+    inheriting it.
 (c) SEMANTICS UNCHANGED — the reconstructed frontier equals an
     independent raw-delta twin (seed ∪ known-deltas, ANTI non-captcha
     fetches, captcha overrides last-writer-wins) computed WITHOUT any
@@ -80,13 +80,13 @@ def tiny(spark, tmp_path_factory) -> CrawlEngine:
     )
 
 
-def _fb_snaps(store: SnapshotStore):
+def _base_snaps(store: SnapshotStore):
     out = []
     for c in store.commits():
         if c["round"] == 0:
-            continue  # round-0 seed base, shared with known (no compaction)
+            continue  # round-0 seed base, shared with known delta 0
         for t in c["tables"]:
-            if t["table"] == "frontier_base" and t["kind"] == "snap":
+            if t["table"] == "known" and t["kind"] == "snap":
                 out.append((c["round"], t, c["metrics"]))
     return out
 
@@ -95,21 +95,20 @@ def _fb_snaps(store: SnapshotStore):
 
 
 def test_compaction_rewrites_only_touched_buckets(deep):
-    snaps = _fb_snaps(deep.store)
+    snaps = _base_snaps(deep.store)
     assert [r for r, _, _ in snaps] == [2, 4, 6]
     for rnd, info, m in snaps:
-        assert "manifest" in info, f"frontier_base @ r{rnd} not bucketed"
+        assert "manifest" in info, f"known @ r{rnd} not bucketed"
         rewritten = [
             k for k, p in info["manifest"].items() if f"snap-{rnd:06d}" in p
         ]
-        # every rewritten entry lives under THIS round's dir, bounded by
-        # the engine's dirty count (a dirty bucket that went empty drops
-        # out of the manifest instead of being rewritten)
-        assert len(rewritten) <= m["frontier_dirty_buckets"], (rnd, rewritten)
+        # every rewritten entry lives under THIS round's dir, exactly the
+        # engine's dirty count (no bucket can go empty)
+        assert len(rewritten) == m["known_dirty_buckets"], (rnd, rewritten)
     # steady state (discovery tapered): far fewer buckets touched than
     # exist, with clean buckets inherited from the PREVIOUS generation
     (_, info4, m4) = snaps[1]
-    assert 0 < m4["frontier_dirty_buckets"] < DEEP_CFG.buckets
+    assert 0 < m4["known_dirty_buckets"] < DEEP_CFG.buckets
     assert any("snap-000002" in p for p in info4["manifest"].values())
 
 
@@ -117,23 +116,21 @@ def test_manifest_spans_generations(deep):
     """After two incremental compactions the live manifest references
     bucket dirs from THREE snapshot rounds — untouched buckets ride
     along by reference indefinitely (Iceberg's manifest-reuse shape)."""
-    (_, info6, _) = _fb_snaps(deep.store)[2]
+    (_, info6, _) = _base_snaps(deep.store)[2]
     gens = {p.split("snap-")[1][:6] for p in info6["manifest"].values()}
     assert {"000002", "000004", "000006"} <= gens
 
 
 def test_quiet_compaction_writes_nothing(tiny):
-    """A compaction round with zero frontier changes re-commits the
+    """A compaction round with zero state changes re-commits the
     previous manifest verbatim — no snap dir is even created."""
-    snaps = {r: (info, m) for r, info, m in _fb_snaps(tiny.store)}
+    snaps = {r: (info, m) for r, info, m in _base_snaps(tiny.store)}
     info6, m6 = snaps[6]
     info4, _ = snaps[4]
-    assert m6["frontier_dirty_buckets"] == 0
+    assert m6["known_dirty_buckets"] == 0
     assert info6["manifest"] == info4["manifest"]
     assert info6["path"] == info4["path"]
-    assert not os.path.exists(
-        os.path.join(tiny.store.root, "frontier_base", "snap-000006")
-    )
+    assert not os.path.exists(os.path.join(tiny.store.root, "known", "snap-000006"))
 
 
 # -- (c) unchanged semantics ----------------------------------------------
@@ -188,33 +185,18 @@ def test_drained_frontier_matches_twin_and_is_typed(tiny):
     assert got == want == []
 
 
-# -- (b) removal safety, storage-level unit test ---------------------------
+# -- (b) no empty buckets, storage-level unit test -------------------------
 
 
-def test_removed_bucket_goes_empty_not_inherited(spark, tmp_path):
+def test_empty_dirty_bucket_raises(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "st"))
-    rows = [("aaa", 0), ("bbb", 1), ("ccc", 2), ("ddd", 3)]
-    df = spark.createDataFrame(rows, "u string, bk int")
+    df = spark.createDataFrame([("aaa", 0), ("bbb", 1)], "u string, bk int")
     info1 = store.write_bucketed_snapshot(df, "t", 1, "bk")
     store.commit_round(1, [info1], {})
-    assert sorted(info1["manifest"]) == ["0", "1", "2", "3"]
-    # bucket 2's only row was removed, bucket 3 changed content
-    upd = spark.createDataFrame([("zzz", 3)], "u string, bk int")
-    info2 = store.write_bucketed_snapshot(
-        upd, "t", 2, "bk", inherit=info1["manifest"], dirty=[2, 3]
-    )
-    store.commit_round(2, [info2], {})
-    assert "2" not in info2["manifest"]
-    assert info2["manifest"]["0"] == info1["manifest"]["0"]
-    assert "snap-000002" in info2["manifest"]["3"]
-    got = sorted(r["u"] for r in store.read_snapshot(spark, "t", 2).collect())
-    assert got == ["aaa", "bbb", "zzz"]
-    # full drain: every remaining bucket removed -> typed empty via sidecar
-    empty = spark.createDataFrame([], "u string, bk int")
-    info3 = store.write_bucketed_snapshot(
-        empty, "t", 3, "bk", inherit=info2["manifest"], dirty=[0, 1, 3]
-    )
-    store.commit_round(3, [info3], {})
-    assert info3["manifest"] == {}
-    out = store.read_snapshot(spark, "t", 3)
-    assert out.columns == ["u"] and out.count() == 0
+    # bucket 2 is declared dirty, but no row lands in it
+    upd = spark.createDataFrame([("zzz", 1)], "u string, bk int")
+    with pytest.raises(ValueError, match=r"dirty buckets \['2'\]"):
+        store.write_bucketed_snapshot(
+            upd, "t", 2, "bk", inherit=info1["manifest"], dirty=[1, 2]
+        )
+    assert store.last_round() == 1

@@ -26,9 +26,11 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
-from housing_crawler_spark import synth
+from housing_crawler_spark import crawl, synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
+from housing_crawler_spark.functions.urls import url_hash
 from housing_crawler_spark.storage.snapshots import SnapshotStore
 
 WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
@@ -69,7 +71,7 @@ def _known_snaps(store: SnapshotStore):
     out = []
     for c in store.commits():
         if c["round"] == 0:
-            continue  # round-0 seed base, shared with frontier_base
+            continue  # round-0 seed base, shared with known delta 0
         for t in c["tables"]:
             if t["table"] == "known" and t["kind"] == "snap":
                 out.append((c["round"], t))
@@ -103,7 +105,7 @@ def test_compaction_rewrites_only_dirty_buckets(bucketed):
 
 
 def test_manifest_union_is_exact_membership(spark, bucketed):
-    """read_compacted via the manifest == raw union of every delta."""
+    """known() via the manifest == raw union of every delta."""
     got = sorted(
         r["canonical_url"] for r in bucketed.known(N_ROUNDS).collect()
     )
@@ -135,8 +137,6 @@ def test_probe_joins_never_shuffle_the_known_side(spark, bucketed):
     """The exact backstop = two broadcast joins of the small candidate
     set against the bucket-pruned known scan. Plan-level proof: no
     shuffle Exchange at all (broadcast exchanges only)."""
-    from pyspark.sql import functions as F
-
     store = bucketed.store
     b = store.latest_snapshot_round("known", N_ROUNDS)
     known_sub = bucketed._known_membership_pruned(b, None, list(range(CFG.buckets)))
@@ -173,20 +173,14 @@ def test_bucketed_backstop_matches_plain_engine(bucketed, plain):
     assert a == c
 
 
-def test_shuffle_fallback_backstop_matches_broadcast(spark, tmp_path_factory, bucketed):
-    """backstop_broadcast_max=0 forces the candidate-flood fallback (shuffle
-    anti-join against the SAME bucket-pruned known scan) on every round;
-    membership and fetch order must be unchanged."""
-    flooded = _run(
-        spark,
-        str(tmp_path_factory.mktemp("kflood")),
-        EngineConfig(
-            bloom_min_known=1,
-            compact_every=2,
-            buckets=8,
-            backstop_broadcast_max=0,
-        ),
-    )
+def test_shuffle_fallback_backstop_matches_broadcast(
+    spark, tmp_path_factory, monkeypatch, bucketed
+):
+    """BACKSTOP_BROADCAST_MAX=0 forces the candidate-flood fallback
+    (shuffle anti-join against the SAME bucket-pruned known scan) on
+    every round; membership and fetch order must be unchanged."""
+    monkeypatch.setattr(crawl, "BACKSTOP_BROADCAST_MAX", 0)
+    flooded = _run(spark, str(tmp_path_factory.mktemp("kflood")), CFG)
     for view in ("seen", "known"):
         a = {r["canonical_url"] for r in flooded.__getattribute__(view)(N_ROUNDS).collect()}
         c = {r["canonical_url"] for r in getattr(bucketed, view)(N_ROUNDS).collect()}
@@ -202,50 +196,71 @@ def test_shuffle_fallback_backstop_matches_broadcast(spark, tmp_path_factory, bu
     assert a == c
 
 
-def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path):
-    """A store written by the PRE-bucketing engine has known snapshots
-    with no bucket manifest. Every base this engine writes is bucketed
-    from round 0, so neither the probe nor the compaction falls back to
-    a full scan: resuming such a store fails with a ValueError naming
-    the format."""
+@pytest.mark.parametrize("fmt", ["pre-bucketing", "two-base"])
+def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path, fmt):
+    """Stores written by older engines are rejected, not crawled on:
+    - pre-bucketing: the known snapshots carry no bucket manifest;
+    - two-base: the frontier lived in a second bucketed base
+      (``frontier_base`` snap entries beside the known base) and known
+      rows had no ``seen`` column.
+    Every base this engine writes is bucketed and flagged from round 0,
+    so neither the probe nor the compaction falls back: resuming such a
+    store fails with a ValueError naming the format."""
     import json
 
     root = str(tmp_path / "klegacy")
     eng = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
 
-    # doctor the round-0 known base into legacy form: a plain
-    # (unpartitioned, manifest-less) parquet of the same rows
-    rows = eng.store.read_snapshot(spark, "known", 0)
-    snap_dir = os.path.join(root, "known", "snap-000000")
-    spark.createDataFrame(rows.toPandas(), rows.schema).coalesce(1).write.parquet(snap_dir)
+    # the seed rows, detached from the files rewritten below
+    seeds = eng.store.read_snapshot(spark, "known", 0)
+    rows = spark.createDataFrame(seeds.toPandas(), seeds.schema)
     commits_path = os.path.join(root, "_commits.json")
     with open(commits_path) as f:
         commits = json.load(f)
-    for t in commits[0]["tables"]:
-        if t["table"] == "known" and t["kind"] == "snap":
-            t.pop("manifest")
-            t.pop("bucket_col")
-            t["path"] = snap_dir
+    tables = commits[0]["tables"]
+    snap = next(t for t in tables if t["table"] == "known" and t["kind"] == "snap")
+    if fmt == "pre-bucketing":
+        # the round-0 known base as a plain (unpartitioned,
+        # manifest-less) parquet of the same rows
+        snap_dir = os.path.join(root, "legacy_known")
+        rows.coalesce(1).write.parquet(snap_dir)
+        snap.pop("manifest")
+        snap.pop("bucket_col")
+        snap["path"] = snap_dir
+    else:
+        # the seed buckets rewritten without the seen column, committed as
+        # known delta 0, known base AND frontier_base base
+        old_dir = os.path.join(root, "frontier_base", "snap-000000")
+        bucket = F.pmod(url_hash(F.col("canonical_url")), F.lit(CFG.buckets))
+        rows.drop("seen").withColumn("__b", bucket).write.mode("overwrite").partitionBy(
+            "__b"
+        ).parquet(old_dir)
+        manifest = {
+            d.split("=")[1]: os.path.join(old_dir, d)
+            for d in os.listdir(old_dir)
+            if d.startswith("__b=")
+        }
+        for t in tables:
+            if t["table"] == "known":
+                t["manifest"], t["path"] = manifest, old_dir
+        tables.insert(1, {**snap, "table": "frontier_base"})
     with open(commits_path, "w") as f:
         json.dump(commits, f)
 
     resumed = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
-    with pytest.raises(ValueError, match="pre-bucketing format"):
+    with pytest.raises(ValueError, match=f"{fmt} format"):
         resumed._since_base(0)
-    # the crawl stops at the first probe or compaction (round 2 at the
-    # latest, compact_every=2) without committing that round
-    with pytest.raises(ValueError, match="pre-bucketing format"):
+    # the crawl stops at round 1's frontier read without committing it
+    with pytest.raises(ValueError, match=f"{fmt} format"):
         resumed.run(2)
-    assert resumed.store.last_round() < 2
+    assert resumed.store.last_round() == 0
 
 
 def test_bucketed_write_requires_static_overwrite_mode(spark, tmp_path):
     """Dynamic partitionOverwriteMode would let stale bucket dirs from a
     crashed attempt survive into the listdir-derived manifest; the write
     refuses up front (round-5 advice)."""
-    from pyspark.sql import functions as F
-
     store = SnapshotStore(str(tmp_path / "kdyn"))
     df = spark.range(10).withColumn("__kb", (F.col("id") % 4).cast("int"))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
