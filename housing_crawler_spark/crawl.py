@@ -117,10 +117,11 @@ BACKSTOP_BROADCAST_MAX = 2_000_000
 BUCKET_COL = "__b"  # partition column of the bucketed snapshots
 
 # frontier rows (attempts/next_round only meaningful post-captcha-
-# override); a known row is a frontier row plus its ``seen`` flag, and
-# the known base and known deltas share that one shape
+# override); a known row (``schemas.KNOWN``) is a frontier row plus its
+# ``seen`` flag. Every store read passes its table's schema: inferring
+# it from the footers costs a one-task Spark job per read
 KNOWN_COLS = [f.name for f in schemas.FRONTIER.fields]
-STATE_COLS = KNOWN_COLS + ["seen"]
+STATE_COLS = schemas.KNOWN.names
 LOG_COLS = ["round", "canonical_url", "kind", "attempts"]  # what _state reads
 
 # image payloads are already codec-compressed; parquet snappy on the
@@ -325,9 +326,9 @@ class CrawlEngine:
         spark, store = self.spark, self.store
         return (
             b,
-            store.read_snapshot(spark, "known", b),
-            store.read_deltas(spark, "known", r, from_round=b + 1),
-            store.read_deltas(spark, "fetch_log", r, from_round=b + 1),
+            store.read_snapshot(spark, "known", b, schemas.KNOWN),
+            store.read_deltas(spark, "known", r, b + 1, schemas.KNOWN),
+            store.read_deltas(spark, "fetch_log", r, b + 1, schemas.FETCH_LOG),
         )
 
     def _state(self, rows: DataFrame, log: DataFrame | None) -> DataFrame:
@@ -409,6 +410,18 @@ class CrawlEngine:
             " init_state into a fresh store."
         )
 
+    def _touched_since(self, b: int, r: int, touched: list[int]) -> list[int] | None:
+        """Sorted union of the base buckets rounds b+1..r touched
+        (``touched`` is round r's own, not committed yet); None when a
+        commit in between does not record its ``touched_buckets``."""
+        out = set(touched)
+        for c in self.store.commits():
+            if b < c["round"] < r:
+                if "touched_buckets" not in c["metrics"]:
+                    return None
+                out.update(c["metrics"]["touched_buckets"])
+        return sorted(out)
+
     def _write_buckets(
         self,
         rows: DataFrame,
@@ -454,7 +467,9 @@ class CrawlEngine:
         listed) ∪ ``adds``, the known deltas since it (already read by
         ``_since_base``), bucket-filtered. I/O is ∝ candidate buckets +
         recent deltas — never ∝ |known|."""
-        parts = [self.store.read_snapshot_buckets(self.spark, "known", b, buckets)]
+        parts = [
+            self.store.read_snapshot_buckets(self.spark, "known", b, buckets, schemas.KNOWN)
+        ]
         if adds is not None:
             parts.append(
                 adds.filter(self._bucket(url_hash(F.col("canonical_url"))).isin(buckets))
@@ -511,7 +526,7 @@ class CrawlEngine:
 
     def seen(self, r: int) -> DataFrame:
         """Derived view: URL-seen membership = non-captcha fetch_log rows."""
-        log = self.store.read_deltas(self.spark, "fetch_log", r)
+        log = self.store.read_deltas(self.spark, "fetch_log", r, schema=schemas.FETCH_LOG)
         if log is None:
             return self.spark.createDataFrame([], schemas.SEEN)
         return log.filter(F.col("kind") != "captcha").select(
@@ -521,11 +536,13 @@ class CrawlEngine:
         )
 
     def fetch_log(self, up_to_round: int) -> DataFrame:
-        df = self.store.read_deltas(self.spark, "fetch_log", up_to_round)
+        df = self.store.read_deltas(
+            self.spark, "fetch_log", up_to_round, schema=schemas.FETCH_LOG
+        )
         return df if df is not None else self.spark.createDataFrame([], schemas.FETCH_LOG)
 
     def images(self, up_to_round: int) -> DataFrame:
-        df = self.store.read_deltas(self.spark, "images", up_to_round)
+        df = self.store.read_deltas(self.spark, "images", up_to_round, schema=schemas.IMAGES)
         return df if df is not None else self.spark.createDataFrame([], schemas.IMAGES)
 
     # -- bloom shard maintenance ------------------------------------------
@@ -559,8 +576,8 @@ class CrawlEngine:
             inherit = None
             rebuilds += 1
         else:
-            fresh = store.read_deltas(spark, "known", r - 1, from_round=covers + 1)
-            current = store.read_manifest(spark, prev, bloom.BLOOM_SCHEMA)
+            fresh = store.read_deltas(spark, "known", r - 1, covers + 1, schemas.KNOWN)
+            current = store.read_info(spark, prev, bloom.BLOOM_SCHEMA)
             if fresh is None:
                 return current, None, {
                     "bloom_covers": covers,
@@ -584,7 +601,7 @@ class CrawlEngine:
         # the probe reads the written buckets back: a lineage cut, so the
         # shard build never re-runs inside the probe's plan
         return (
-            store.read_manifest(spark, info, bloom.BLOOM_SCHEMA),
+            store.read_info(spark, info, bloom.BLOOM_SCHEMA),
             info,
             {"bloom_covers": r - 1, "bloom_n_bits": n_bits, "bloom_rebuilds": rebuilds},
         )
@@ -609,7 +626,7 @@ class CrawlEngine:
         n_seen_prev = last_metrics.get("n_seen", 0)
 
         if self._robots is None:
-            self._robots = store.read_snapshot(spark, "robots", 0)
+            self._robots = store.read_snapshot(spark, "robots", 0, schemas.ROBOTS)
         robots = self._robots
         budgets = with_budgets(robots, world.round_seconds)
 
@@ -677,19 +694,25 @@ class CrawlEngine:
         mark("plan_build")
 
         # ONE driver-side accounting job: fetch counts per (host, kind)
-        # unioned with new-frontier counts per host — materializes both
-        # caches as a side effect
+        # unioned with new-frontier counts per host, each with the base
+        # buckets its URLs hash into (what a compaction must rewrite) —
+        # materializes both caches as a side effect
+        counts = [
+            F.count(F.lit(1)).alias("count"),
+            F.collect_set(self._bucket(url_hash(F.col("canonical_url")))).alias("buckets"),
+        ]
         stats = (
             fetched.groupBy("host", "kind")
-            .count()
+            .agg(*counts)
             .unionByName(
                 new_entries.groupBy("host")
-                .count()
+                .agg(*counts)
                 .withColumn("kind", F.lit("__new__"))
-                .select("host", "kind", "count")
+                .select("host", "kind", "count", "buckets")
             )
             .collect()
         )
+        touched = sorted({int(x) for row in stats for x in row["buckets"]})
         mark("fetch_and_links_exec")
         if probe_cache is not None:
             # new_entries' cache is materialized by the stats job above,
@@ -784,28 +807,35 @@ class CrawlEngine:
         if r % cfg.compact_every == 0:
             # The base is INCREMENTAL: every state change since base b
             # flows through the known deltas (admissions) and fetch_log
-            # (seen flags, captcha overrides), round r's still in memory
-            # (new_entries, log), so the buckets that changed are exactly
-            # those some URL in them hashes into. Every such URL is known,
-            # so no dirty bucket is empty. Rewrite volume ∝ dirty-bucket
-            # rows, not |known|; known() still reads O(compact_every) dirs
-            # via the manifest.
-            pend = _union([adds] + ([new_entries] if n_new > 0 else []), STATE_COLS)
-            log_all = _union([log_since, log], LOG_COLS)
-            dirty = sorted(
-                int(x["b"])
-                for x in _union([pend, log_all], ["canonical_url"])
-                .select(self._bucket(url_hash(F.col("canonical_url"))).alias("b"))
-                .distinct()
-                .collect()
-            )
-            n_dirty = len(dirty)
+            # (seen flags, captcha overrides), so the buckets that changed
+            # are exactly those some admitted or fetched URL hashes into —
+            # the union of the ``touched_buckets`` rounds b+1..r recorded
+            # (None: some round did not record them, so every bucket).
+            # Every such URL is known, so no dirty bucket is empty. Round
+            # r's rows are read back from the dirs just written, so the
+            # plan is over files, not over the round's lineage. Rewrite
+            # volume ∝ dirty-bucket rows, not |known|; known() still reads
+            # O(compact_every) dirs via the manifest.
+            dirty = self._touched_since(b, r, touched)
+            scan = range(cfg.buckets) if dirty is None else dirty
+            n_dirty = len(scan)
             prev = store.snapshot_info("known", b)
-            if dirty:
+            if scan:
+                new_known = (
+                    store.read_info(spark, done_infos["known"], schemas.KNOWN)
+                    if "known" in done_infos
+                    else None
+                )
                 rows = _union(
-                    [store.read_snapshot_buckets(spark, "known", b, dirty), pend],
+                    [
+                        store.read_snapshot_buckets(spark, "known", b, scan, schemas.KNOWN),
+                        adds,
+                        new_known,
+                    ],
                     STATE_COLS,
                 )
+                new_log = store.read_info(spark, done_infos["fetch_log"], schemas.FETCH_LOG)
+                log_all = _union([log_since, new_log], LOG_COLS)
                 infos.append(self._write_buckets(self._state(rows, log_all), r, prev, dirty))
             else:  # a quiet interval re-commits the old manifest
                 infos.append(dict(prev))
@@ -822,6 +852,7 @@ class CrawlEngine:
                 h: sum(row["count"] for row in kind_host if row["host"] == h)
                 for h in {row["host"] for row in kind_host}
             },
+            "touched_buckets": touched,
             "timings": timings,
             **bloom_meta,
             **({} if n_dirty is None else {"known_dirty_buckets": n_dirty}),
@@ -880,9 +911,12 @@ class CrawlEngine:
         r = self.store.last_round() + 1
         infos = [self.store.write_delta(images, "images", r, IMAGE_WRITE_OPTS)]
         prev = self.store.commits()[-1]["metrics"]
-        n = spark.read.parquet(infos[0]["path"]).count()
+        n = self.store.footer_rows(infos[0]["path"])
+        # images only: the round touches no known-base bucket
         self.store.commit_round(
-            r, infos, {**prev, "backfill": True, "n_backfilled_images": n}
+            r,
+            infos,
+            {**prev, "backfill": True, "n_backfilled_images": n, "touched_buckets": []},
         )
         return {"round": r, "n_backfilled_images": n}
 

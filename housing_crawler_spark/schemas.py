@@ -21,6 +21,12 @@ FRONTIER = T.StructType(
     ]
 )
 
+# the known base and the known deltas share one shape: a frontier row
+# plus its ``seen`` flag
+KNOWN = T.StructType(
+    FRONTIER.fields + [T.StructField("seen", T.BooleanType(), False)]
+)
+
 SEEN = T.StructType(
     [
         T.StructField("canonical_url", T.StringType(), False),

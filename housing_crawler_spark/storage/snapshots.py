@@ -38,6 +38,10 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# a table's schema (StructType or DDL string); None infers it from footers
+Schema = StructType | str | None
 
 
 class SnapshotStore:
@@ -86,8 +90,9 @@ class SnapshotStore:
         under this round's snap dir; every untouched bucket is carried
         forward by REFERENCE — its manifest entry keeps pointing at the
         older round's bucket dir, zero bytes rewritten. Readers use the
-        manifest (``read_snapshot`` / ``read_snapshot_buckets``), so a
-        compaction's write volume is ∝ dirty-bucket rows, not |table|.
+        manifest (``read_snapshot`` / ``read_snapshot_buckets`` /
+        ``read_info``), so a compaction's write volume is ∝ dirty-bucket
+        rows, not |table|.
 
         ``dirty`` (when given) lists every bucket the caller knows
         changed, and each must come out with rows: no table this store
@@ -110,12 +115,13 @@ class SnapshotStore:
             )
             or "static"
         ).lower()
-        assert mode == "static", (
-            "write_bucketed_snapshot requires"
-            " spark.sql.sources.partitionOverwriteMode=static; got "
-            f"{mode!r} — the listdir-derived manifest would adopt stale"
-            " bucket dirs from crashed attempts"
-        )
+        if mode != "static":
+            raise ValueError(
+                "write_bucketed_snapshot requires"
+                " spark.sql.sources.partitionOverwriteMode=static; got "
+                f"{mode!r} — the listdir-derived manifest would adopt stale"
+                " bucket dirs from crashed attempts"
+            )
         (
             df_dirty.write.mode("overwrite").partitionBy(bucket_col).parquet(path)
         )
@@ -223,19 +229,25 @@ class SnapshotStore:
                     return t
         return None
 
-    def read_snapshot(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
-        info = self.snapshot_info(table, rnd)
-        if info is not None and "manifest" in info:
-            return self.read_manifest(spark, info)
-        return spark.read.parquet(self._dir(table, "snap", rnd))
+    @staticmethod
+    def _reader(spark: SparkSession, schema: Schema):
+        """A parquet reader; a known ``schema`` skips Spark's footer-
+        inference job (one 1-task job per read otherwise)."""
+        return spark.read if schema is None else spark.read.schema(schema)
 
-    def read_manifest(
-        self, spark: SparkSession, info: dict, schema: str | None = None
+    def read_snapshot(
+        self, spark: SparkSession, table: str, rnd: int, schema: Schema = None
     ) -> DataFrame:
-        """Every bucket of a bucketed snapshot's write info (committed or
-        not yet). A known ``schema`` skips the footer-inference job."""
+        info = self.snapshot_info(table, rnd) or {"path": self._dir(table, "snap", rnd)}
+        return self.read_info(spark, info, schema)
+
+    def read_info(self, spark: SparkSession, info: dict, schema: Schema = None) -> DataFrame:
+        """The rows of one write info (committed or not yet): every bucket
+        of a bucketed snapshot's manifest, or a plain snap/delta dir."""
+        reader = self._reader(spark, schema)
+        if "manifest" not in info:
+            return reader.parquet(info["path"])
         paths = sorted(info["manifest"].values())
-        reader = spark.read if schema is None else spark.read.schema(schema)
         if not paths:
             # a snapshot written with zero rows: typed empty state via the
             # sidecar
@@ -243,7 +255,12 @@ class SnapshotStore:
         return reader.parquet(*paths)
 
     def read_snapshot_buckets(
-        self, spark: SparkSession, table: str, rnd: int, buckets: list[int]
+        self,
+        spark: SparkSession,
+        table: str,
+        rnd: int,
+        buckets: list[int],
+        schema: Schema = None,
     ) -> DataFrame | None:
         """Bucket-pruned read of a bucketed snapshot: only the manifest
         paths for ``buckets`` are listed/scanned — the I/O the per-round
@@ -252,7 +269,7 @@ class SnapshotStore:
         assert info is not None and "manifest" in info, f"{table}@{rnd} not bucketed"
         manifest = info["manifest"]
         paths = [manifest[str(b)] for b in sorted(set(buckets)) if str(b) in manifest]
-        return spark.read.parquet(*paths) if paths else None
+        return self._reader(spark, schema).parquet(*paths) if paths else None
 
     def _delta_paths(self, table: str, from_round: int, up_to_round: int) -> list[str]:
         """Committed delta dirs for ``table`` in [from_round, up_to]. A
@@ -277,12 +294,13 @@ class SnapshotStore:
         table: str,
         up_to_round: int,
         from_round: int = 0,
+        schema: Schema = None,
     ) -> DataFrame | None:
         """Union of committed deltas for ``table`` in [from_round, up_to]."""
         paths = self._delta_paths(table, from_round, up_to_round)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return self._reader(spark, schema).parquet(*paths)
 
     def compacted_paths(
         self, table: str, up_to_round: int

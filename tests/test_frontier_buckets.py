@@ -32,6 +32,7 @@ state kept with rewrite volume ∝ touched rows.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -200,3 +201,43 @@ def test_empty_dirty_bucket_raises(spark, tmp_path):
             upd, "t", 2, "bk", inherit=info1["manifest"], dirty=[1, 2]
         )
     assert store.last_round() == 1
+
+
+# -- plans over files --------------------------------------------------------
+
+
+@pytest.mark.parametrize("r", [3, 4])
+def test_state_plans_launch_no_spark_jobs(spark, tiny, r):
+    """Every store read of the crawl state passes its table's schema, so
+    building frontier(r) and known(r) — off a base (3) and on one (4) —
+    runs no footer-inference job: 0 Spark jobs until an action."""
+    group = f"state-plan-{r}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build the state plans only")
+    try:
+        tiny.frontier(r)
+        tiny.known(r)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_compaction_after_unrecorded_round_rewrites_every_bucket(spark, tmp_path, tiny):
+    """A commit without ``touched_buckets`` (a store written before rounds
+    recorded them) makes the next compaction rewrite every bucket — and
+    the state it writes equals the one an incremental compaction wrote."""
+    eng = _mk(spark, str(tmp_path / "legacy"), TINY_WORLD, TINY_CFG, 3)
+    path = os.path.join(eng.store.root, "_commits.json")
+    with open(path) as f:
+        commits = json.load(f)
+    del commits[-1]["metrics"]["touched_buckets"]
+    with open(path, "w") as f:
+        json.dump(commits, f)
+    m4 = eng.run(4)[0]
+    assert m4["known_dirty_buckets"] == TINY_CFG.buckets
+    info = eng.store.snapshot_info("known", 4)
+    assert all("snap-000004" in p for p in info["manifest"].values())
+    def state(e: CrawlEngine) -> list[tuple]:
+        return sorted(tuple(x) for x in e.known(4).collect())
+
+    assert state(eng) == state(tiny)

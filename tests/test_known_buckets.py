@@ -265,7 +265,7 @@ def test_bucketed_write_requires_static_overwrite_mode(spark, tmp_path):
     df = spark.range(10).withColumn("__kb", (F.col("id") % 4).cast("int"))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        with pytest.raises(AssertionError, match="partitionOverwriteMode"):
+        with pytest.raises(ValueError, match="partitionOverwriteMode"):
             store.write_bucketed_snapshot(df, "known", 1, "__kb")
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
