@@ -12,12 +12,14 @@ per round):
   (seed round 0, then per-round discovered links after robots +
   membership gates), carrying a ``seen`` flag and its captcha state.
   Because every fetched URL was first admitted, ``seen ⊆ known``, so the
-  J1 discovered-link gate is a single exact check against *known* —
-  bloom-prefiltered, and at scale served by the HASH-BUCKETED known
-  base: rows live in pmod(url_hash, buckets) buckets behind a per-bucket
-  manifest, and the per-round backstop reads ONLY the buckets the
-  bloom-surviving candidates hash into, joined broadcast so the known
-  side is never shuffled (test_known_buckets.py).
+  J1 discovered-link gate is a single exact check against *known*:
+  exact against the known deltas since the latest base, and against
+  the base itself bloom-prefiltered, served at scale by the
+  HASH-BUCKETED base: rows live in pmod(url_hash, buckets) buckets
+  behind a per-bucket manifest, and the per-round backstop reads ONLY
+  the buckets the bloom-surviving candidates hash into, joined
+  broadcast so the known side is never shuffled
+  (test_known_buckets.py).
 - ``fetch_log`` — append-only: the URLs fetched per round. Its
   non-captcha rows are the reference's URL-seen membership
   (crawl_wggesucht.py:297-299); its captcha rows are per-round
@@ -45,12 +47,15 @@ per round):
   pre-bucketing store format) or without the ``seen`` column (the
   two-base format, which kept the frontier in a second base) is
   rejected (ValueError).
-- ``bloom`` — the seen-filter's shards, one more bucketed snapshot
-  (shard id == base bucket, the same ``buckets`` modulus). Once
-  ``n_known`` reaches ``bloom_min_known``, a round re-ORs only the
-  shards its fresh known rows hash into and carries every other shard
-  forward by manifest reference; below it the link gate is a plain
-  exact anti-join.
+- ``bloom`` — the seen-filter of a known base: one shard per base
+  bucket (the same ``buckets`` modulus), committed as a bucketed
+  snapshot in the same round as the base. Whenever a base with at
+  least ``bloom_min_known`` rows is written, the shards of exactly the
+  buckets written are built from their rows, and every other shard
+  carries forward by manifest reference; the bloom is never written
+  between bases. A base without shards (below ``bloom_min_known``)
+  gates links with one plain exact anti-join. A store whose bloom was
+  rewritten every round (the per-round-bloom format) is rejected.
 - ``images`` — append-only deltas (the input_hint image table).
 
 A round:
@@ -61,10 +66,13 @@ A round:
         ├─ fetch_log delta (non-captcha rows: seen; captcha rows:
         │    attempts+1, eligible after backoff)
         ├─ listing out_links ─canonicalize→ robots gate →
-        │    anti-join vs known (bloom pre-filter at scale) →
-        │    first-seen-wins dedup → known delta (eligible round r+1)
+        │    anti-join vs known deltas since base b → bloom@b probe →
+        │    pruned backstop vs base b → first-seen-wins dedup →
+        │    known delta (eligible round r+1)
         └─ detail rows ─clean caption (native exprs)─mapInPandas
              image stage─> images delta (input_hint shape)
+    every compact_every rounds: known base @r (dirty buckets) ─>
+        bloom @r (the same buckets' shards)
 
 All deltas committed atomically (SnapshotStore) — kill the process
 anywhere and re-running resumes bit-identically (test_crawl_resume).
@@ -95,19 +103,19 @@ from .storage.snapshots import SnapshotStore
 @dataclass
 class EngineConfig:
     salt_threshold: int = 100_000
-    bloom_min_known: int = 200_000  # below this an exact anti-join is cheaper
+    # a known base of at least this many rows gets bloom shards; below
+    # it an exact anti-join is cheaper
+    bloom_min_known: int = 200_000
     compact_every: int = 8  # rounds between base materializations
     buckets: int = 16  # url_hash buckets of the known base AND the bloom
     # seen-filter's shards (one modulus: a bloom shard is the base bucket
     # of its keys. At 10^10 URLs: thousands of buckets, so a probe's
     # candidate set prunes to a small fraction of the table and a
-    # compaction or bloom round rewrites only the buckets some
+    # compaction rewrites only the buckets, and their shards, some
     # admitted/fetched URL hashes into)
     verify_decode: bool = False  # round-trip decode + invariant check at ingest
 
 
-BLOOM_BITS_PER_KEY = 10
-BLOOM_GROWTH = 4  # headroom factor when sizing/rebuilding shards
 # maybe-seen rows above which the exact backstop falls back from
 # broadcast joins to a shuffle anti-join (a revisit-heavy round can make
 # MOST links bloom survivors; broadcasting an unbounded candidate set
@@ -141,6 +149,13 @@ def _union(dfs: list[DataFrame | None], cols: list[str]) -> DataFrame | None:
     """unionByName of the non-None frames' ``cols``; None if there are none."""
     dfs = [d.select(*cols) for d in dfs if d is not None]
     return reduce(DataFrame.unionByName, dfs) if dfs else None
+
+
+def _keyed(df: DataFrame) -> DataFrame:
+    """(url_hash, canonical_url) of ``df``'s rows: the exact membership
+    key (the hash co-partitions cheaply, the URL string makes 64-bit
+    collisions unable to drop a distinct new URL at 10^10 scale)."""
+    return df.select(url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url")
 
 
 def _shuffle_partitions(spark: SparkSession) -> int:
@@ -303,6 +318,8 @@ class CrawlEngine:
             self.store.write_snapshot(robots.coalesce(1), "robots", 0),
         ]
         n_known = sum(self.store.footer_rows(p) for p in base0["manifest"].values())
+        if n_known >= self.cfg.bloom_min_known:
+            infos.append(self._write_bloom(base0, 0))
         self.store.commit_round(0, infos, {"streaks": {}, "halted": [], "n_known": n_known})
 
     # -- derived state ---------------------------------------------------
@@ -390,7 +407,10 @@ class CrawlEngine:
         """Round of the latest known base at or before round ``r``. Every
         base is bucketed and carries the ``seen`` flag from round 0 on,
         so a base without either can only come from an older store
-        format."""
+        format; so can a commit recording ``bloom_covers``, the coverage
+        of a bloom rewritten every round rather than built with a base
+        (its ``bloom@b`` covers only rounds ≤ b-1, so reading it as
+        base b's filter would admit round b's links twice)."""
         store = self.store
         b = store.latest_snapshot_round("known", r)
         info = None if b is None else store.snapshot_info("known", b)
@@ -401,6 +421,11 @@ class CrawlEngine:
             fmt = (
                 "two-base format (a separate frontier base table beside"
                 " known rows with no seen column)"
+            )
+        elif any("bloom_covers" in c["metrics"] for c in store.commits()):
+            fmt = (
+                "per-round-bloom format (bloom snapshots rewritten every"
+                " round, each covering the rounds before it, not a known base)"
             )
         else:
             return b
@@ -458,40 +483,46 @@ class CrawlEngine:
             dirty=dirty,
         )
 
-    def _known_membership_pruned(
-        self, b: int, adds: DataFrame | None, buckets: list[int]
-    ) -> DataFrame | None:
-        """(url_hash, canonical_url) membership rows restricted to the
-        given url_hash buckets: manifest-pruned read of the bucketed
-        known base @``b`` (only those buckets' parquet dirs are even
-        listed) ∪ ``adds``, the known deltas since it (already read by
-        ``_since_base``), bucket-filtered. I/O is ∝ candidate buckets +
-        recent deltas — never ∝ |known|."""
-        parts = [
-            self.store.read_snapshot_buckets(self.spark, "known", b, buckets, schemas.KNOWN)
-        ]
-        if adds is not None:
-            parts.append(
-                adds.filter(self._bucket(url_hash(F.col("canonical_url"))).isin(buckets))
-            )
-        out = _union(parts, ["canonical_url"])
-        if out is None:
-            return None
-        return out.select(
-            url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url"
+    def _write_bloom(
+        self, base: dict, r: int, dirty: list[int] | None = None, prev: dict | None = None
+    ) -> dict:
+        """Round ``r``'s bloom snapshot: the seen-filter of the known base
+        ``base`` just written. One shard per bucket written (``dirty``;
+        every bucket when None), built from that bucket's rows read back
+        from its files; every other shard carries forward by reference
+        from ``prev``, the previous base's bloom."""
+        man = base["manifest"]
+        written = {k: man[k] for k in (man if dirty is None else map(str, dirty))}
+        rows = self.store.read_info(self.spark, {"manifest": written}, schemas.KNOWN)
+        shards = bloom.build_shards(_keyed(rows), self.cfg.buckets)
+        return self.store.write_bucketed_snapshot(
+            shards.withColumn(BUCKET_COL, F.col("shard_id")),
+            "bloom",
+            r,
+            BUCKET_COL,
+            inherit=None if prev is None else prev["manifest"],
+            dirty=dirty,
         )
 
+    def _known_membership_pruned(self, b: int, buckets: list[int]) -> DataFrame | None:
+        """(url_hash, canonical_url) membership rows of the given url_hash
+        buckets of the bucketed known base @``b``: a manifest-pruned read
+        (only those buckets' parquet dirs are even listed), so I/O is ∝
+        candidate buckets — never ∝ |known|."""
+        sub = self.store.read_snapshot_buckets(self.spark, "known", b, buckets, schemas.KNOWN)
+        return None if sub is None else _keyed(sub)
+
     def _bucket_pruned_backstop(
-        self, b: int, adds: DataFrame | None, links: DataFrame, shards: DataFrame
+        self, b: int, links: DataFrame, shards: DataFrame
     ) -> tuple[DataFrame, DataFrame]:
-        """Exact not-in-known gate for bloom-surviving candidates, in
-        the 100×-scale shape: bloom passes the definitely-new majority
-        through untouched; the maybe-seen minority's url_hash buckets
-        are collected (≤ buckets ints) and ONLY those buckets of
-        the known set (base @``b`` ∪ ``adds``) are read. The exact check
-        then runs as two broadcast joins of the SMALL candidate set
-        against the pruned scan — the known side is never shuffled (no
-        Exchange; asserted by test_known_buckets) and never read in full.
+        """Exact not-in-base-@``b`` gate for links, through ``shards``
+        (bloom@``b``) in the 100×-scale shape: the bloom passes the
+        definitely-new majority through untouched; the maybe-seen
+        minority's url_hash buckets are collected (≤ buckets ints) and
+        ONLY those buckets of base @``b`` are read. The exact check then
+        runs as two broadcast joins of the SMALL candidate set against
+        the pruned scan — the known side is never shuffled (no Exchange;
+        asserted by test_known_buckets) and never read in full.
 
         Returns (gated_links, cache_handle) — caller unpersists the
         handle once the round's downstream caches are materialized."""
@@ -508,7 +539,7 @@ class CrawlEngine:
         n_maybe, buckets = int(row["n"]), sorted(int(x) for x in row["bs"])
         if not buckets:
             return fresh, probed
-        known_sub = self._known_membership_pruned(b, adds, buckets)
+        known_sub = self._known_membership_pruned(b, buckets)
         if known_sub is None:
             return fresh.unionByName(maybe), probed
         keys = ["url_hash", "canonical_url"]
@@ -545,65 +576,22 @@ class CrawlEngine:
         df = self.store.read_deltas(self.spark, "images", up_to_round, schema=schemas.IMAGES)
         return df if df is not None else self.spark.createDataFrame([], schemas.IMAGES)
 
-    # -- bloom shard maintenance ------------------------------------------
-
-    def _maintain_bloom(self, r: int, known_hashes: DataFrame, last_metrics: dict):
-        """Incremental seen-filter maintenance (north_rule: seen-filter
-        shards checkpoint to snapshots). The bloom is one more bucketed
-        snapshot: shard id == base bucket, so a round re-ORs ONLY the
-        shards touched by known deltas since the last build
-        (``bloom.or_shards``) and writes just those buckets, every other
-        bucket carried forward by the previous manifest. A full rebuild
-        happens only on first activation (or over a store with no bloom
-        snapshot) and when the key count outgrows the fixed bit width
-        (capacity check); a round with no fresh known rows reuses the
-        previous snapshot and writes nothing.
-        Returns (shards_for_probe, write_info|None, metrics_patch)."""
-        spark, store, cfg = self.spark, self.store, self.cfg
-        n_known_prev = last_metrics["n_known"]
-        covers = last_metrics.get("bloom_covers")
-        n_bits = last_metrics.get("bloom_n_bits")
-        rebuilds = last_metrics.get("bloom_rebuilds", 0)
-        b = store.latest_snapshot_round("bloom", r - 1)
-        prev = None if b is None else store.snapshot_info("bloom", b)
-        if prev is None or n_known_prev > n_bits * cfg.buckets // BLOOM_BITS_PER_KEY:
-            # full (re)build, sized with growth headroom so subsequent
-            # rounds stay incremental
-            want = BLOOM_GROWTH * BLOOM_BITS_PER_KEY * max(1, n_known_prev)
-            # floor at 2^12 bits/shard: the one sizing rule of the shards
-            n_bits = 1 << max(12, (want // cfg.buckets).bit_length())
-            shards = bloom.build_shards(known_hashes, cfg.buckets, n_bits=n_bits)
-            inherit = None
-            rebuilds += 1
-        else:
-            fresh = store.read_deltas(spark, "known", r - 1, covers + 1, schemas.KNOWN)
-            current = store.read_info(spark, prev, bloom.BLOOM_SCHEMA)
-            if fresh is None:
-                return current, None, {
-                    "bloom_covers": covers,
-                    "bloom_n_bits": n_bits,
-                    "bloom_rebuilds": rebuilds,
-                }
-            dirty = bloom.build_shards(
-                fresh.select(url_hash(F.col("canonical_url")).alias("url_hash")),
-                cfg.buckets,
-                n_bits=n_bits,
-            )
-            shards = bloom.or_shards(current, dirty)
-            inherit = prev["manifest"]
-        info = store.write_bucketed_snapshot(
-            shards.withColumn(BUCKET_COL, F.col("shard_id")),
-            "bloom",
-            r,
-            BUCKET_COL,
-            inherit=inherit,
-        )
-        # the probe reads the written buckets back: a lineage cut, so the
-        # shard build never re-runs inside the probe's plan
+    def _images_of(self, fetched: DataFrame) -> DataFrame:
+        """Image rows (``schemas.IMAGES``) of the detail pages among
+        ``fetched`` (``schemas.FETCHED``) rows: caption cleaned by native
+        exprs, payloads generated/encoded by the Arrow image stage."""
         return (
-            store.read_info(spark, info, bloom.BLOOM_SCHEMA),
-            info,
-            {"bloom_covers": r - 1, "bloom_n_bits": n_bits, "bloom_rebuilds": rebuilds},
+            fetched.filter(F.col("kind") == "detail")
+            .select(
+                "canonical_url",
+                url_hash(F.col("canonical_url")).alias("url_hash"),
+                clean_caption(F.col("caption_raw")).alias("caption"),
+                "n_images",
+                "payload_seed",
+            )
+            .mapInPandas(
+                make_image_stage(self.world, self.cfg.verify_decode), schemas.IMAGES
+            )
         )
 
     # -- one round -------------------------------------------------------
@@ -659,22 +647,20 @@ class CrawlEngine:
         )
         links = robots_gate(links, robots).drop("path", "dirty_url")
         links = links.withColumn("url_hash", url_hash(F.col("canonical_url")))
-        # the exact anti-join backstop keys on (url_hash, canonical_url):
-        # the hash co-partitions cheaply, the URL string makes 64-bit
-        # collisions unable to drop a distinct new URL at 10^10 scale
-        known = _union([base, adds], ["canonical_url"])
-        known_hashes = known.select(
-            url_hash(F.col("canonical_url")).alias("url_hash"), "canonical_url"
-        )
-        bloom_info, bloom_meta, probe_cache = None, {}, None
-        if n_known_prev >= cfg.bloom_min_known:
-            shards, bloom_info, bloom_meta = self._maintain_bloom(
-                r, known_hashes, last_metrics
-            )
-            links, probe_cache = self._bucket_pruned_backstop(b, adds, links, shards)
+        keys = ["url_hash", "canonical_url"]
+        bloom_info, probe_cache = store.snapshot_info("bloom", b), None
+        if bloom_info is None:
+            # base b has no shards (small-known regime): one exact
+            # anti-join against base ∪ deltas is cheapest
+            known = _union([base, adds], ["canonical_url"])
+            links = links.join(_keyed(known), keys, "left_anti")
         else:
-            # small-known regime: plain exact anti-join is cheapest
-            links = links.join(known_hashes, ["url_hash", "canonical_url"], "left_anti")
+            # exact against the deltas since b, then base b through its
+            # bloom and the bucket-pruned backstop
+            if adds is not None:
+                links = links.join(_keyed(adds), keys, "left_anti")
+            shards = store.read_info(spark, bloom_info, bloom.BLOOM_SCHEMA)
+            links, probe_cache = self._bucket_pruned_backstop(b, links, shards)
         links = links.drop("url_hash")
         new_entries = (
             first_seen_wins(links)
@@ -731,17 +717,7 @@ class CrawlEngine:
                     n_listing_by_host.get(row["host"], 0) + row["count"]
                 )
 
-        details = fetched.filter(F.col("kind") == "detail").withColumn(
-            "caption", clean_caption(F.col("caption_raw"))
-        )
-        images = details.select(
-            "canonical_url",
-            url_hash(F.col("canonical_url")).alias("url_hash"),
-            "caption",
-            "n_images",
-            "payload_seed",
-        ).mapInPandas(make_image_stage(world, cfg.verify_decode), schemas.IMAGES)
-
+        images = self._images_of(fetched)
         log = fetched.select(
             F.lit(r).alias("round"),
             "host",
@@ -771,7 +747,7 @@ class CrawlEngine:
         # distinct output dirs — submit them concurrently so the small
         # fetch_log/known writes ride the image job's ramp-up and tail
         # instead of serializing after it. infos keeps the historical
-        # [fetch_log, bloom, known, images] commit order. If one write
+        # [fetch_log, known, images] commit order. If one write
         # fails, the pool still waits for its siblings and result() then
         # re-raises before commit_round: the finished sibling dirs are
         # never listed in _commits.json, so readers ignore them, and the
@@ -792,12 +768,7 @@ class CrawlEngine:
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
             futs = {name: pool.submit(fn) for name, fn in jobs}
         done_infos = {name: f.result() for name, f in futs.items()}
-        infos = [done_infos["fetch_log"]]
-        if bloom_info is not None:
-            infos.append(bloom_info)
-        for name in ("known", "images"):
-            if name in done_infos:
-                infos.append(done_infos[name])
+        infos = list(done_infos.values())
         mark("delta_writes")
 
         n_new = sum(new_per_host.values())
@@ -815,11 +786,18 @@ class CrawlEngine:
             # r's rows are read back from the dirs just written, so the
             # plan is over files, not over the round's lineage. Rewrite
             # volume ∝ dirty-bucket rows, not |known|; known() still reads
-            # O(compact_every) dirs via the manifest.
-            dirty = self._touched_since(b, r, touched)
+            # O(compact_every) dirs via the manifest. A base of at least
+            # bloom_min_known rows gets the written buckets' bloom shards
+            # (every bucket's, when base b has none).
+            prev = store.snapshot_info("known", b)
+            with_bloom = n_known >= cfg.bloom_min_known
+            dirty = (
+                None
+                if with_bloom and bloom_info is None
+                else self._touched_since(b, r, touched)
+            )
             scan = range(cfg.buckets) if dirty is None else dirty
             n_dirty = len(scan)
-            prev = store.snapshot_info("known", b)
             if scan:
                 new_known = (
                     store.read_info(spark, done_infos["known"], schemas.KNOWN)
@@ -836,9 +814,12 @@ class CrawlEngine:
                 )
                 new_log = store.read_info(spark, done_infos["fetch_log"], schemas.FETCH_LOG)
                 log_all = _union([log_since, new_log], LOG_COLS)
-                infos.append(self._write_buckets(self._state(rows, log_all), r, prev, dirty))
-            else:  # a quiet interval re-commits the old manifest
-                infos.append(dict(prev))
+                base_r = self._write_buckets(self._state(rows, log_all), r, prev, dirty)
+                infos.append(base_r)
+                if with_bloom:
+                    infos.append(self._write_bloom(base_r, r, dirty, bloom_info))
+            else:  # a quiet interval re-commits the old manifests
+                infos.extend(dict(i) for i in (prev, bloom_info) if i is not None)
             mark("compaction")
 
         metrics = {
@@ -854,7 +835,7 @@ class CrawlEngine:
             },
             "touched_buckets": touched,
             "timings": timings,
-            **bloom_meta,
+            **({} if bloom_info is None else {"bloom_base": b}),
             **({} if n_dirty is None else {"known_dirty_buckets": n_dirty}),
         }
         store.commit_round(r, infos, metrics)
@@ -869,7 +850,7 @@ class CrawlEngine:
     def backfill_images(self, up_to_round: int) -> dict:
         """Regenerate image rows for every fetched detail page that has
         none in the images table; committed as a new round."""
-        spark, world, cfg = self.spark, self.world, self.cfg
+        spark = self.spark
         details = self.fetch_log(up_to_round).filter(F.col("kind") == "detail")
         present = (
             self.images(up_to_round)
@@ -895,19 +876,8 @@ class CrawlEngine:
         refetched = missing.repartition(
             _shuffle_partitions(spark),
             "canonical_url",
-        ).mapInPandas(make_fetch_stage(world), schemas.FETCHED)
-        images = (
-            refetched.filter(F.col("kind") == "detail")
-            .withColumn("caption", clean_caption(F.col("caption_raw")))
-            .select(
-                "canonical_url",
-                url_hash(F.col("canonical_url")).alias("url_hash"),
-                "caption",
-                "n_images",
-                "payload_seed",
-            )
-            .mapInPandas(make_image_stage(world, cfg.verify_decode), schemas.IMAGES)
-        )
+        ).mapInPandas(make_fetch_stage(self.world), schemas.FETCHED)
+        images = self._images_of(refetched)
         r = self.store.last_round() + 1
         infos = [self.store.write_delta(images, "images", r, IMAGE_WRITE_OPTS)]
         prev = self.store.commits()[-1]["metrics"]

@@ -15,21 +15,19 @@ passes through the driver. A ``sub_splits`` fan-out key keeps task
 parallelism above the shard count without duplicating work (each
 (shard, sub) task still reads one bitset).
 
-The geometry is EXPLICIT: the caller passes the shard count and the
-bits per shard to ``build_shards`` and the same shard count to
-``probe`` (both required; the engine sizes the bits, with a 2^12-bit
-floor). Inferring the shard count from ``max(shard_id)+1`` would
-misroute every probe whenever the highest buckets happen to be empty —
-silently voiding the zero-false-negative guarantee (test_bloom.py pins
-this).
+The shard count is EXPLICIT: the caller passes it to ``build_shards``
+and the same count to ``probe``. Inferring it from ``max(shard_id)+1``
+would misroute every probe whenever the highest buckets happen to be
+empty — silently voiding the zero-false-negative guarantee
+(test_bloom.py pins this). Each shard sizes itself from its own key
+count: the next power of two ≥ ``BITS_PER_KEY`` bits per key, at least
+2^12 bits, recorded in the shard row the probe reads.
 
-Every shard has the same fixed width, so shards are OR-mergeable:
-per-round known deltas rebuild only the shards they touch, and
-``or_shards`` ORs them into exactly those shards of the current set.
 The engine keys its shards by the known base's bucket modulus and
-stores them as one more bucketed snapshot, so an incremental round
-rewrites only the dirty shards and every clean shard carries forward
-by manifest reference.
+builds them with the base: whenever a compaction writes known buckets
+it rebuilds exactly those buckets' shards from the rows just written,
+and every clean shard carries forward by manifest reference — the
+bloom is an index of one known base, never maintained between bases.
 
 The exact ``left_anti`` join against the known set remains the
 correctness backstop (the engine's bucket-pruned one, ``crawl.py``),
@@ -53,6 +51,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BLOOM_SCHEMA = "shard_id int, n_shards int, n_bits long, n_hashes int, bitset binary"
+BITS_PER_KEY = 10  # ~1% false positives at 4 hashes
+MIN_BITS = 1 << 12
 
 
 def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -63,14 +63,13 @@ def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(n_bits)).astype(np.int64)
 
 
-def build_shards(
-    seen: DataFrame, n_shards: int, n_bits: int, n_hashes: int = 4
-) -> DataFrame:
-    """seen(url_hash long) → one ``n_bits``-wide bitset row per non-empty
-    shard (one fixed width for every shard, so incremental deltas
-    OR-merge)."""
+def build_shards(seen: DataFrame, n_shards: int, n_hashes: int = 4) -> DataFrame:
+    """seen(url_hash long) → one bitset row per non-empty shard, each
+    ``BITS_PER_KEY`` bits per key rounded up to a power of two (at least
+    ``MIN_BITS``)."""
 
     def one_shard(key, pdf: pd.DataFrame):
+        n_bits = max(MIN_BITS, 1 << (BITS_PER_KEY * len(pdf) - 1).bit_length())
         arr = np.zeros(n_bits // 8, dtype=np.uint8)
         pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
         np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
@@ -86,35 +85,6 @@ def build_shards(
 
     keyed = seen.withColumn("shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
     return keyed.groupBy("shard_id").applyInPandas(one_shard, BLOOM_SCHEMA)
-
-
-def or_shards(current: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR ``delta`` shard rows into ``current``, touching ONLY the shard
-    ids present in ``delta`` (incremental maintenance: untouched shards
-    are not read, not rewritten, not returned). Both sides must carry
-    identical (n_shards, n_bits, n_hashes) — i.e. be built with the same
-    explicit geometry."""
-
-    def merge(key, pdf: pd.DataFrame):
-        first = pdf.iloc[0]
-        geo = pdf[["n_shards", "n_bits", "n_hashes"]].drop_duplicates()
-        assert len(geo) == 1, f"shard {key}: mixed bloom geometry {geo.values}"
-        acc = np.zeros(int(first["n_bits"]) // 8, dtype=np.uint8)
-        for b in pdf["bitset"]:
-            acc |= np.frombuffer(b, np.uint8)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "n_shards": [int(first["n_shards"])],
-                "n_bits": [int(first["n_bits"])],
-                "n_hashes": [int(first["n_hashes"])],
-                "bitset": [acc.tobytes()],
-            }
-        )
-
-    dirty_ids = delta.select("shard_id").distinct()
-    touched = current.join(F.broadcast(dirty_ids), "shard_id", "left_semi")
-    return touched.unionByName(delta).groupBy("shard_id").applyInPandas(merge, BLOOM_SCHEMA)
 
 
 def probe(

@@ -81,6 +81,9 @@ SIM_BITS = 60  # md5int token hashes are 60-bit, so bits 60+ never vote
 BAND_BITS = 15
 N_BANDS = 4
 TAU = 6  # Hamming confirm threshold (exact copies hash identically)
+# band rows above which the probe falls back from broadcasting the
+# round's band table to a shuffle join (still over pruned buckets)
+BROADCAST_MAX = 2_000_000
 
 
 def sketch_table(docs: DataFrame) -> DataFrame:
@@ -136,7 +139,6 @@ class IncrementalDeduper:
         spark: SparkSession,
         store: SnapshotStore,
         n_buckets: int = 16,
-        broadcast_max: int = 2_000_000,
         band_bits: int = BAND_BITS,
         n_bands: int = N_BANDS,
         tau: int = TAU,
@@ -145,12 +147,11 @@ class IncrementalDeduper:
         self.spark = spark
         self.store = store
         self.n_buckets = n_buckets
-        self.broadcast_max = broadcast_max
         self.band_bits = band_bits
         self.n_bands = n_bands
         self.tau = tau
         self.table = table
-        self._last_round: int | None = store.last_round()
+        self._last_round = store.latest_snapshot_round(table, store.last_round() or 0)
 
     def _bucket(self, band_k: F.Column, band_val: F.Column) -> F.Column:
         return F.pmod(
@@ -224,7 +225,7 @@ class IncrementalDeduper:
                 F.col("simhash").alias("sh2"),
                 "rep",
             )
-            if n_bands_rows <= self.broadcast_max:
+            if n_bands_rows <= BROADCAST_MAX:
                 # round-bounded probe side broadcasts; the state side is
                 # never shuffled (asserted by test_incdedup)
                 hits = st.join(F.broadcast(probe), ["band_k", "band_val"])
@@ -289,7 +290,9 @@ class IncrementalDeduper:
         n_assigned = assign.count()
 
         # append this round's bands (pointing at resolved reps) into the
-        # dirty buckets only; clean buckets carry forward by reference
+        # dirty buckets only; clean buckets carry forward by reference. A
+        # round with no band rows changes no bucket: it commits no state
+        # entry, and the latest state stays the previous round's
         new_rows = bands.join(assign.select("doc_id", "rep_id"), "doc_id").select(
             "band_k",
             "band_val",
@@ -297,40 +300,40 @@ class IncrementalDeduper:
             F.col("rep_id").alias("rep"),
             "bucket",
         )
-        prev_info = (
-            store.snapshot_info(self.table, self._last_round)
-            if self._last_round is not None
-            else None
-        )
-        # bucket-dir reads don't carry the partition column (it lives in
-        # the dir name — same as the crawl's known-set reads, which
-        # re-derive it); recompute from the band key
-        old_dirty = self._state_sub(buckets)
-        df_dirty = (
-            new_rows
-            if old_dirty is None
-            else old_dirty.select(
-                "band_k",
-                "band_val",
-                "simhash",
-                "rep",
-                self._bucket(F.col("band_k"), F.col("band_val")).alias("bucket"),
-            ).unionByName(new_rows)
-        )
-        info = store.write_bucketed_snapshot(
-            df_dirty,
-            self.table,
-            rnd,
-            "bucket",
-            inherit=(prev_info or {}).get("manifest"),
-            dirty=buckets,
-        )
+        infos = []
+        if buckets:
+            prev_info = store.snapshot_info(self.table, self._last_round)
+            # bucket-dir reads don't carry the partition column (it lives
+            # in the dir name — same as the crawl's known-set reads, which
+            # re-derive it); recompute from the band key
+            old_dirty = self._state_sub(buckets)
+            df_dirty = (
+                new_rows
+                if old_dirty is None
+                else old_dirty.select(
+                    "band_k",
+                    "band_val",
+                    "simhash",
+                    "rep",
+                    self._bucket(F.col("band_k"), F.col("band_val")).alias("bucket"),
+                ).unionByName(new_rows)
+            )
+            infos.append(
+                store.write_bucketed_snapshot(
+                    df_dirty,
+                    self.table,
+                    rnd,
+                    "bucket",
+                    inherit=(prev_info or {}).get("manifest"),
+                    dirty=buckets,
+                )
+            )
         store.commit_round(
             rnd,
-            [info],
+            infos,
             {"n_docs_sketched": n_assigned, "n_band_rows": n_bands_rows},
         )
-        self._last_round = rnd
+        self._last_round = store.latest_snapshot_round(self.table, rnd)
         bands.unpersist()
         sketch.unpersist()
         return assign

@@ -13,6 +13,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# paths in one parquet read above which Spark lists them with a parallel
+# Spark job instead of on the driver (its default is 32). Crawl reads
+# name manifest paths, one per bucket: at the default, every read of a
+# 64-bucket base launched a listing job, each paying the job floor
+PARTITION_DISCOVERY_THRESHOLD = 1 << 16
 
 
 def _driver_memory() -> str:
@@ -64,6 +69,10 @@ def spark_session(
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(PARTITION_DISCOVERY_THRESHOLD),
+        )
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

@@ -141,27 +141,12 @@ class SnapshotStore:
             # never adopt a dir outside the declared dirty set (second
             # line of defense vs stale dirs)
             written = {k: p for k, p in written.items() if k in keys}
-        manifest = {**(inherit or {}), **written}
-        if not manifest:
-            # zero-row schema sidecar, kept because IncrementalDeduper's
-            # zero-document first round commits an empty manifest: an
-            # empty partitioned write leaves no footer to infer a schema
-            # from, so read_snapshot falls back to this. Written ONLY
-            # then (it costs a whole Spark job); "_"-prefixed dirs are
-            # invisible to Spark's dir-level parquet listing.
-            (
-                df_dirty.drop(bucket_col)
-                .limit(0)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(path, "_schema"))
-            )
         return {
             "table": table,
             "kind": "snap",
             "path": path,
             "bucket_col": bucket_col,
-            "manifest": manifest,
+            "manifest": {**(inherit or {}), **written},
         }
 
     def write_delta(
@@ -247,12 +232,7 @@ class SnapshotStore:
         reader = self._reader(spark, schema)
         if "manifest" not in info:
             return reader.parquet(info["path"])
-        paths = sorted(info["manifest"].values())
-        if not paths:
-            # a snapshot written with zero rows: typed empty state via the
-            # sidecar
-            return reader.parquet(os.path.join(info["path"], "_schema"))
-        return reader.parquet(*paths)
+        return reader.parquet(*sorted(info["manifest"].values()))
 
     def read_snapshot_buckets(
         self,

@@ -1,23 +1,27 @@
-"""Bloom-active crawl: with the seen-filter forced on from round 1 the
+"""Bloom-active crawl: with the seen-filter on from the round-0 base the
 engine must (a) produce exactly the same crawl as with it off — the
-bloom is a pure pre-filter — and (b) maintain shards INCREMENTALLY:
-after the activation build, each round's bloom snapshot rewrites only
-the buckets touched by the known URLs discovered since the last build
-and carries every other bucket forward by manifest reference
-(docs/SCALE_DESIGN.md's re-OR-dirty-shards promise)."""
+bloom is a pure pre-filter — and (b) keep the bloom an INDEX OF THE
+KNOWN BASE: a bloom snapshot is written exactly when a known base is,
+rewrites exactly the buckets that base rewrites, carries every other
+shard forward by manifest reference, and each shard equals the shard
+built from its base bucket's rows (docs/SCALE_DESIGN.md)."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
-from housing_crawler_spark import synth
+from housing_crawler_spark import schemas, synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
-from housing_crawler_spark.functions.hashing import xxhash64
+from housing_crawler_spark.functions.urls import url_hash
+from housing_crawler_spark.operators import bloom
 from housing_crawler_spark.storage.snapshots import SnapshotStore
 
 WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
 N_ROUNDS = 6
 BUCKETS = 8
+# bases (and with them shards) at rounds 0, 2, 4 and 6
+ON = EngineConfig(bloom_min_known=1, buckets=BUCKETS, compact_every=2)
 
 
 def _run(spark, root: str, cfg: EngineConfig) -> CrawlEngine:
@@ -32,7 +36,7 @@ def engines(spark, tmp_path_factory):
     on = _run(
         spark,
         str(tmp_path_factory.mktemp("bloom_on")),
-        EngineConfig(bloom_min_known=1, buckets=BUCKETS),
+        ON,
     )
     off = _run(
         spark,
@@ -59,57 +63,75 @@ def test_bloom_is_a_pure_prefilter(engines):
     assert a == b
 
 
-def test_incremental_deltas_touch_only_dirty_shards(spark, engines):
+def _snap_rounds(store: SnapshotStore, table: str) -> list[int]:
+    return [
+        c["round"]
+        for c in store.commits()
+        if any(t["table"] == table and t["kind"] == "snap" for t in c["tables"])
+    ]
+
+
+def test_incremental_deltas_touch_only_dirty_shards(engines):
+    """The bloom is written in exactly the known base rounds, and at each
+    one it rewrites exactly the buckets the base rewrites; every other
+    shard keeps its previous manifest path."""
     on, _ = engines
     store = on.store
-    commits = store.commits()
-    bloom_rounds = [
-        c["round"]
-        for c in commits
-        if any(t["table"] == "bloom" and t["kind"] == "snap" for t in c["tables"])
-    ]
-    assert bloom_rounds, "bloom never activated"
-    # round 0 records n_known, so bloom_min_known=1 turns the filter on
-    # in the very first round
-    assert bloom_rounds[0] == 1, bloom_rounds
-    covers = {c["round"]: c["metrics"]["bloom_covers"] for c in commits[1:]}
+    rounds = _snap_rounds(store, "known")
+    assert rounds == [0, 2, 4, 6]
+    assert _snap_rounds(store, "bloom") == rounds
 
-    prev = store.snapshot_info("bloom", bloom_rounds[0])["manifest"]
-    for r in bloom_rounds[1:]:
-        man = store.snapshot_info("bloom", r)["manifest"]
-        # this round's fresh known rows: the deltas the previous round's
-        # bloom did not cover yet
-        fresh = store.read_deltas(spark, "known", covers[r], from_round=covers[r - 1] + 1)
-        assert fresh is not None
-        want = {xxhash64(row["canonical_url"]) % BUCKETS for row in fresh.collect()}
-        got = {int(k) for k, path in man.items() if f"snap-{r:06d}" in path}
-        assert got == want, (r, got, want)
-        assert set(prev) <= set(man), r
-        for k, path in man.items():
-            if int(k) not in want:
-                assert path == prev[k], (r, k, path)
-        prev = man
+    def rewritten(man: dict, r: int) -> set[str]:
+        return {k for k, path in man.items() if f"snap-{r:06d}" in path}
+
+    n_rewritten = []
+    for prev_r, r in zip([None, *rounds], rounds):
+        known = store.snapshot_info("known", r)["manifest"]
+        shards = store.snapshot_info("bloom", r)["manifest"]
+        assert set(shards) == set(known), r  # one shard per base bucket
+        assert rewritten(shards, r) == rewritten(known, r), r
+        if prev_r is not None:
+            prev = store.snapshot_info("bloom", prev_r)["manifest"]
+            for k in set(shards) - rewritten(shards, r):
+                assert shards[k] == prev[k], (r, k)
+        n_rewritten.append(len(rewritten(shards, r)))
+    # the round-0 build covers every seeded bucket; later bases rewrite
+    # shards too, and not always all of them
+    assert n_rewritten[0] == len(store.snapshot_info("bloom", 0)["manifest"])
+    assert any(n_rewritten[1:]), n_rewritten
+    assert min(n_rewritten[1:]) < BUCKETS, n_rewritten
+
+
+def test_each_shard_is_built_from_its_base_bucket(spark, engines):
+    """Every shard of bloom@b equals ``build_shards`` over base@b's rows
+    for that bucket: the bloom covers exactly its base, no more, no
+    less, and each shard is sized from its own key count."""
+    on, _ = engines
+    store = on.store
+    for b in _snap_rounds(store, "known"):
+        base = store.read_snapshot(spark, "known", b, schemas.KNOWN)
+        keys = base.select(url_hash(F.col("canonical_url")).alias("url_hash"))
+        want = {
+            (r["shard_id"], r["n_bits"], bytes(r["bitset"]))
+            for r in bloom.build_shards(keys, BUCKETS).collect()
+        }
+        got = {
+            (r["shard_id"], r["n_bits"], bytes(r["bitset"]))
+            for r in store.read_snapshot(spark, "bloom", b, bloom.BLOOM_SCHEMA).collect()
+        }
+        assert got == want, b
+
 
 def test_resume_preserves_bloom_state(spark, tmp_path_factory, engines):
     """Kill after round 3 and resume: the latest bloom snapshot and the
     final state must be bit-identical to the uninterrupted bloom-on run."""
     on, _ = engines
     root = str(tmp_path_factory.mktemp("bloom_resume"))
-    eng = CrawlEngine(
-        spark,
-        SnapshotStore(root),
-        WORLD,
-        EngineConfig(bloom_min_known=1, buckets=BUCKETS),
-    )
+    eng = CrawlEngine(spark, SnapshotStore(root), WORLD, ON)
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
     eng.run(3)
     # new engine over the same store picks up after the last commit
-    eng2 = CrawlEngine(
-        spark,
-        SnapshotStore(root),
-        WORLD,
-        EngineConfig(bloom_min_known=1, buckets=BUCKETS),
-    )
+    eng2 = CrawlEngine(spark, SnapshotStore(root), WORLD, ON)
     eng2.run(N_ROUNDS)
 
     def latest_bloom(eng: CrawlEngine) -> set:

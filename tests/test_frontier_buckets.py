@@ -206,17 +206,29 @@ def test_empty_dirty_bucket_raises(spark, tmp_path):
 # -- plans over files --------------------------------------------------------
 
 
-@pytest.mark.parametrize("r", [3, 4])
-def test_state_plans_launch_no_spark_jobs(spark, tiny, r):
+@pytest.mark.parametrize(
+    "world, r",
+    [
+        pytest.param("tiny", 3, id="3"),
+        pytest.param("tiny", 4, id="4"),
+        pytest.param("deep", 3, id="deep-3"),
+        pytest.param("deep", 4, id="deep-4"),
+    ],
+)
+def test_state_plans_launch_no_spark_jobs(spark, request, world, r):
     """Every store read of the crawl state passes its table's schema, so
     building frontier(r) and known(r) — off a base (3) and on one (4) —
-    runs no footer-inference job: 0 Spark jobs until an action."""
-    group = f"state-plan-{r}"
+    runs no footer-inference job; and the session lists a read's paths on
+    the driver, so DEEP's 64-bucket manifests (more paths than Spark's
+    default parallel-listing threshold of 32) launch no file-listing job
+    either: 0 Spark jobs until an action."""
+    eng = request.getfixturevalue(world)
+    group = f"state-plan-{world}-{r}"
     sc = spark.sparkContext
     sc.setJobGroup(group, "build the state plans only")
     try:
-        tiny.frontier(r)
-        tiny.known(r)
+        eng.frontier(r)
+        eng.known(r)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

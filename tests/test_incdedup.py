@@ -8,9 +8,12 @@ probe join is never shuffled (broadcast)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from housing_crawler_spark.operators import incdedup
 from housing_crawler_spark.operators.incdedup import (
     _TABLE,
     BAND_BITS,
@@ -115,12 +118,13 @@ def stream(spark):
     ]
 
 
-def test_incdedup_matches_twin(spark, tmp_path, stream):
-    store = SnapshotStore(str(tmp_path / "store"))
-    dd = IncrementalDeduper(spark, store, n_buckets=8)
+def _ingest_vs_twin(spark, root: str, rounds: list) -> dict[int, int]:
+    """Ingest ``rounds`` (one docs frame each) into a fresh deduper and
+    assert its assignments equal the twin's; returns the twin's."""
+    dd = IncrementalDeduper(spark, SnapshotStore(root), n_buckets=8)
     got: dict[int, int] = {}
     rounds_sketch = []
-    for rnd, docs in enumerate(stream, start=1):
+    for rnd, docs in enumerate(rounds, start=1):
         rounds_sketch.append(
             {
                 int(r["doc_id"]): int(r["simhash"])
@@ -132,6 +136,11 @@ def test_incdedup_matches_twin(spark, tmp_path, stream):
             assert r["is_new_rep"] == (r["rep_id"] == r["doc_id"])
     want = _twin(rounds_sketch)
     assert got == want
+    return want
+
+
+def test_incdedup_matches_twin(spark, tmp_path, stream):
+    want = _ingest_vs_twin(spark, str(tmp_path / "store"), stream)
     # the planted structure actually exercised the machinery
     assert want[201] == 0 and want[202] == 2  # cross-round dups caught
     assert want[205] == 3  # near-dup (one-token edit) caught at tau>0
@@ -141,6 +150,28 @@ def test_incdedup_matches_twin(spark, tmp_path, stream):
     # MinHash-band-only design failed)
     assert want[100] == 100 and want[310] == 310
     assert sum(1 for d, r in want.items() if d != r) >= 5
+
+
+def test_incdedup_zero_document_round_writes_no_state(spark, tmp_path, stream):
+    """A zero-document first round commits no state entry (no write, no
+    schema sidecar), and the two rounds after it still match the twin."""
+    root = str(tmp_path / "store")
+    empty = _mkdocs(spark, [])
+    want = _ingest_vs_twin(spark, root, [empty, stream[0], stream[1]])
+    assert want[201] == 0  # round 3 still resolves against round 2's state
+    commits = SnapshotStore(root).commits()
+    assert [c["round"] for c in commits] == [1, 2, 3]
+    assert commits[0]["tables"] == []
+    assert not any("_schema" in dirs for _, dirs, _ in os.walk(root))
+
+
+def test_incdedup_shuffle_fallback_matches_twin(spark, tmp_path, stream, monkeypatch):
+    """BROADCAST_MAX=0 forces the candidate-flood fallback (shuffle join
+    against the same pruned state buckets) on every probe; the
+    assignments still equal the twin's."""
+    monkeypatch.setattr(incdedup, "BROADCAST_MAX", 0)
+    want = _ingest_vs_twin(spark, str(tmp_path / "store"), stream)
+    assert want[300] == 0 and want[205] == 3  # cross-round matches probed
 
 
 def test_incdedup_resume_from_store(spark, tmp_path, stream):

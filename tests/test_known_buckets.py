@@ -122,7 +122,7 @@ def test_pruned_membership_reads_only_candidate_buckets(spark, bucketed):
     b = store.latest_snapshot_round("known", N_ROUNDS)
     info = store.snapshot_info("known", b)
     want = [0, 3]
-    df = bucketed._known_membership_pruned(b, None, want)  # no deltas after base
+    df = bucketed._known_membership_pruned(b, want)
     files = df.inputFiles()
     assert files, "pruned read returned no files"
     allowed = tuple(
@@ -139,7 +139,7 @@ def test_probe_joins_never_shuffle_the_known_side(spark, bucketed):
     shuffle Exchange at all (broadcast exchanges only)."""
     store = bucketed.store
     b = store.latest_snapshot_round("known", N_ROUNDS)
-    known_sub = bucketed._known_membership_pruned(b, None, list(range(CFG.buckets)))
+    known_sub = bucketed._known_membership_pruned(b, list(range(CFG.buckets)))
     cand = known_sub.limit(5).unionByName(
         spark.createDataFrame(
             [(123456789, "https://host-0/nowhere")], "url_hash long, canonical_url string"
@@ -196,16 +196,20 @@ def test_shuffle_fallback_backstop_matches_broadcast(
     assert a == c
 
 
-@pytest.mark.parametrize("fmt", ["pre-bucketing", "two-base"])
+@pytest.mark.parametrize("fmt", ["pre-bucketing", "two-base", "per-round-bloom"])
 def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path, fmt):
     """Stores written by older engines are rejected, not crawled on:
     - pre-bucketing: the known snapshots carry no bucket manifest;
     - two-base: the frontier lived in a second bucketed base
       (``frontier_base`` snap entries beside the known base) and known
-      rows had no ``seen`` column.
+      rows had no ``seen`` column;
+    - per-round-bloom: the bloom was rewritten every round, its commits
+      recording the rounds it covered (``bloom_covers``), so a
+      ``bloom@b`` need not index base b.
     Every base this engine writes is bucketed and flagged from round 0,
-    so neither the probe nor the compaction falls back: resuming such a
-    store fails with a ValueError naming the format."""
+    and every bloom is built with its base, so neither the probe nor the
+    compaction falls back: resuming such a store fails with a ValueError
+    naming the format."""
     import json
 
     root = str(tmp_path / "klegacy")
@@ -228,7 +232,7 @@ def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path, fmt):
         snap.pop("manifest")
         snap.pop("bucket_col")
         snap["path"] = snap_dir
-    else:
+    elif fmt == "two-base":
         # the seed buckets rewritten without the seen column, committed as
         # known delta 0, known base AND frontier_base base
         old_dir = os.path.join(root, "frontier_base", "snap-000000")
@@ -245,6 +249,9 @@ def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path, fmt):
             if t["table"] == "known":
                 t["manifest"], t["path"] = manifest, old_dir
         tables.insert(1, {**snap, "table": "frontier_base"})
+    else:
+        # the per-round bloom bookkeeping of the older engine
+        commits[0]["metrics"].update(bloom_covers=0, bloom_n_bits=1 << 12, bloom_rebuilds=1)
     with open(commits_path, "w") as f:
         json.dump(commits, f)
 
