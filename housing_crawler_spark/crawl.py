@@ -132,19 +132,6 @@ KNOWN_COLS = [f.name for f in schemas.FRONTIER.fields]
 STATE_COLS = schemas.KNOWN.names
 LOG_COLS = ["round", "canonical_url", "kind", "attempts"]  # what _state reads
 
-# image payloads are already codec-compressed; parquet snappy on the
-# binary column is pure overhead AND serializes under concurrency
-# (JNI buffer lock) — measured 3x write throughput without it
-IMAGE_WRITE_OPTS = {
-    "compression": "none",
-    "parquet.enable.dictionary": "false",
-    # small row groups: the default 128 MB write buffer per concurrent
-    # task (32x) thrashes the single local JVM; blobs don't benefit from
-    # big row groups anyway
-    "parquet.block.size": str(4 * 1024 * 1024),
-}
-
-
 def _union(dfs: list[DataFrame | None], cols: list[str]) -> DataFrame | None:
     """unionByName of the non-None frames' ``cols``; None if there are none."""
     dfs = [d.select(*cols) for d in dfs if d is not None]
@@ -753,18 +740,19 @@ class CrawlEngine:
         # never listed in _commits.json, so readers ignore them, and the
         # retried round overwrites them (write mode "overwrite") — the
         # same at-most-once commit that makes a crash mid-round safe.
+        # The writes may run concurrently only because they share the
+        # store's one parquet format: parquet-mr's default values-writer
+        # factory is a JVM-wide singleton that each new file writer
+        # re-initializes with its own properties, so writers with
+        # different option sets pick up each other's dictionary settings
+        # (storage/snapshots.py module docstring).
         jobs: list[tuple[str, object]] = [
             ("fetch_log", lambda: store.write_delta(log, "fetch_log", r))
         ]
         if sum(new_per_host.values()) > 0:
             jobs.append(("known", lambda: store.write_delta(new_entries, "known", r)))
         if n_detail > 0:
-            jobs.append(
-                (
-                    "images",
-                    lambda: store.write_delta(images, "images", r, IMAGE_WRITE_OPTS),
-                )
-            )
+            jobs.append(("images", lambda: store.write_delta(images, "images", r)))
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
             futs = {name: pool.submit(fn) for name, fn in jobs}
         done_infos = {name: f.result() for name, f in futs.items()}
@@ -879,7 +867,7 @@ class CrawlEngine:
         ).mapInPandas(make_fetch_stage(self.world), schemas.FETCHED)
         images = self._images_of(refetched)
         r = self.store.last_round() + 1
-        infos = [self.store.write_delta(images, "images", r, IMAGE_WRITE_OPTS)]
+        infos = [self.store.write_delta(images, "images", r)]
         prev = self.store.commits()[-1]["metrics"]
         n = self.store.footer_rows(infos[0]["path"])
         # images only: the round touches no known-base bucket

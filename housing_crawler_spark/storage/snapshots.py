@@ -19,6 +19,40 @@ Layout:
                                         # entry's manifest (which may also
                                         # point into older snap dirs)
 
+Every parquet file of every table (crawl state, bloom shards, images,
+incdedup state) is written in ONE format, ``WRITE_FORMAT``:
+
+- zstd pages, the codec Iceberg has defaulted its parquet writes to
+  since 1.4. parquet-mr 1.16 takes one codec per file, so the image
+  payloads are zstd too. An older per-table format left them
+  uncompressed because snappy serialized on them under concurrency at
+  32 cores. At 4 cores zstd does not: four concurrent tasks writing
+  117 MB of dctq payloads (crawl_codec world) kept ~3.7 cores busy and
+  took 0.42 s and 1.5 CPU-s, against 0.29 s and 1.0 CPU-s uncompressed
+  (medians of 7 alternating writes), for 0.2% fewer bytes.
+- dictionary encoding for every column except ``bytes``, the image
+  payloads: they are already codec-compressed and all distinct, so a
+  dictionary attempt only costs a fallback. The small image columns
+  (``fmt``, ``w``, ``h``) keep it.
+- 4 MiB row groups: the default 128 MB write buffer per concurrent task
+  crowds the single local JVM, and blobs gain nothing from big groups.
+
+It must be one format for every write, not one per table. parquet-mr
+builds each file writer's column writers through
+``ParquetProperties.DEFAULT_VALUES_WRITER_FACTORY``, a JVM-wide
+singleton that every new writer re-initializes with ITS properties. So
+writers with different option sets that open files at the same moment
+(a crawl round's concurrent fetch_log/known/images delta writes) build
+column writers from each other's settings. With per-table options, 65
+concurrent write trios of crawl tables gave 18 of 780 files another
+table's dictionary setting (0 of 780 with one format), and one images
+file of two same-seed crawls was 186,282 B in one run and 181,095 B in
+the other: the ~0.5% store-size jitter between identical crawls. With
+one format every writer installs the same properties, and same-seed
+crawls write equal-sized files (test_store_format.py). The codec is recorded per
+column chunk, so files written earlier in other codecs (snappy state,
+uncompressed images) read, resume and compact as before.
+
 Commit protocol (crash-safe):
 1. write every table's ``snap-``/``delta-`` dir for round r (parquet
    write is to a temp name then rename by Spark itself);
@@ -42,6 +76,13 @@ from pyspark.sql.types import StructType
 
 # a table's schema (StructType or DDL string); None infers it from footers
 Schema = StructType | str | None
+
+# the parquet format of every file the store writes (module docstring)
+WRITE_FORMAT = {
+    "compression": "zstd",
+    "parquet.enable.dictionary#bytes": "false",
+    "parquet.block.size": str(4 * 1024 * 1024),
+}
 
 
 class SnapshotStore:
@@ -70,10 +111,8 @@ class SnapshotStore:
     def _dir(self, table: str, kind: str, rnd: int) -> str:
         return os.path.join(self.root, table, f"{kind}-{rnd:06d}")
 
-    def write_snapshot(
-        self, df: DataFrame, table: str, rnd: int, options: dict | None = None
-    ) -> dict:
-        return self._write(df, table, "snap", rnd, options)
+    def write_snapshot(self, df: DataFrame, table: str, rnd: int) -> dict:
+        return self._write(df, table, "snap", rnd)
 
     def write_bucketed_snapshot(
         self,
@@ -122,9 +161,7 @@ class SnapshotStore:
                 f"{mode!r} — the listdir-derived manifest would adopt stale"
                 " bucket dirs from crashed attempts"
             )
-        (
-            df_dirty.write.mode("overwrite").partitionBy(bucket_col).parquet(path)
-        )
+        self._writer(df_dirty).partitionBy(bucket_col).parquet(path)
         prefix = f"{bucket_col}="
         written = {
             d[len(prefix):]: os.path.join(path, d)
@@ -149,19 +186,17 @@ class SnapshotStore:
             "manifest": {**(inherit or {}), **written},
         }
 
-    def write_delta(
-        self, df: DataFrame, table: str, rnd: int, options: dict | None = None
-    ) -> dict:
-        return self._write(df, table, "delta", rnd, options)
+    def write_delta(self, df: DataFrame, table: str, rnd: int) -> dict:
+        return self._write(df, table, "delta", rnd)
 
-    def _write(
-        self, df: DataFrame, table: str, kind: str, rnd: int, options: dict | None = None
-    ) -> dict:
+    @staticmethod
+    def _writer(df: DataFrame):
+        """An overwriting parquet writer in the store's one WRITE_FORMAT."""
+        return df.write.mode("overwrite").options(**WRITE_FORMAT)
+
+    def _write(self, df: DataFrame, table: str, kind: str, rnd: int) -> dict:
         path = self._dir(table, kind, rnd)
-        writer = df.write.mode("overwrite")
-        for k, v in (options or {}).items():
-            writer = writer.option(k, v)
-        writer.parquet(path)
+        self._writer(df).parquet(path)
         files = sorted(
             f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
         )
@@ -281,20 +316,6 @@ class SnapshotStore:
         if not paths:
             return None
         return self._reader(spark, schema).parquet(*paths)
-
-    def compacted_paths(
-        self, table: str, up_to_round: int
-    ) -> tuple[str | None, list[str]]:
-        """(latest snapshot dir or None, delta dirs after it) — what a
-        read of ``table``'s state at ``up_to_round`` (latest snapshot ∪
-        deltas since) touches. Exposed so tests can assert the per-read
-        dir count stays bounded by the compaction interval."""
-        b = self.latest_snapshot_round(table, up_to_round)
-        # a carried-forward snapshot points into an older round's dir,
-        # so take the path from its commit entry
-        snap = self.snapshot_info(table, b)["path"] if b is not None else None
-        lo = b + 1 if b is not None else 0
-        return snap, self._delta_paths(table, lo, up_to_round)
 
     # -- rollback ----------------------------------------------------------
 

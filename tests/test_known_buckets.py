@@ -321,10 +321,10 @@ def test_failed_concurrent_delta_write_leaves_round_uncommitted(
 
     real = SnapshotStore.write_delta
 
-    def failing(self, df, table, rnd, options=None):
+    def failing(self, df, table, rnd):
         if table == "images" and rnd == k:
             raise OSError("injected images write failure")
-        return real(self, df, table, rnd, options)
+        return real(self, df, table, rnd)
 
     monkeypatch.setattr(SnapshotStore, "write_delta", failing)
     with pytest.raises(OSError, match="injected"):
