@@ -222,11 +222,13 @@ def make_image_stage(cfg: synth.WorldConfig, verify_decode: bool = False):
                         buf = encode(img, fmt)
                         if verify_decode:
                             out, f2 = decode(buf)
-                            assert f2 == fmt
-                            if fmt in LOSSLESS:
-                                assert out.tobytes() == img.tobytes()
-                            else:
-                                assert psnr(img, out) >= 40.0
+                            ok = f2 == fmt and (
+                                out.tobytes() == img.tobytes()
+                                if fmt in LOSSLESS
+                                else psnr(img, out) >= 40.0
+                            )
+                            if not ok:
+                                raise ValueError(f"verify-decode failed: {url} image {idx} ({fmt})")
                         rows["image_id"].append(f"{uh:016x}-{idx}")
                         rows["bytes"].append(buf)
                         rows["w"].append(img.shape[1])

@@ -27,23 +27,6 @@ def simplify_umlauts(col: Column) -> Column:
     return F.regexp_replace(s, "ß", "ss")
 
 
-def standardize_characters(col: Column, separator: str = "_") -> Column:
-    """Forward normalization for file keys (reference
-    string_utils.py:19-30): lowercase, spaces→separator, accents→ascii,
-    ä/ö/ü/ß→ae/oe/ue/ss. Inverse (modulo accents) of
-    ``german_characters``."""
-    s = F.lower(col)
-    s = F.regexp_replace(s, " ", separator)
-    s = F.regexp_replace(s, "ä", "ae")
-    s = F.regexp_replace(s, "ö", "oe")
-    s = F.regexp_replace(s, "ü", "ue")
-    s = F.regexp_replace(s, "ß", "ss")
-    s = F.regexp_replace(s, "æ", "ae")
-    return F.translate(
-        s, "ãõáéíóúçàèìòùâêîôûëïñīåøÿšýşğ", "aoaeioucaeiouaeioueiniaoysysg"
-    )
-
-
 def german_characters(col: Column) -> Column:
     """Reverse transliteration: ``_``→space, ae→ä, oe→ö, ue→ü, and
     ss→ß EXCEPT for Düsseldorf (reference string_utils.py:12-17 applies

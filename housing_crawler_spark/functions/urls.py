@@ -30,9 +30,6 @@ from pyspark.sql import functions as F
 
 TRACKING_PARAMS = ("utm_", "ref=", "fbclid=", "gclid=", "asset_id=")
 
-# seed for xxhash64 — fixed so hashes are stable across sessions/snapshots
-XXHASH_SEED = 42
-
 
 def canonicalize_url(url: Column) -> Column:
     """Build the canonical-URL Column from a raw URL Column (native exprs)."""
@@ -90,10 +87,6 @@ def url_hash(canonical: Column) -> Column:
     pure-Python twin (functions/hashing.py) matches that default.
     """
     return F.xxhash64(canonical)
-
-
-def host_of(canonical: Column) -> Column:
-    return F.regexp_extract(canonical, r"^[a-z][a-z0-9+.-]*://([^/?#]*)", 1)
 
 
 def path_of(canonical: Column) -> Column:

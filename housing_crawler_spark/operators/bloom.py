@@ -11,7 +11,7 @@ of bits across shards, far too big to collect or broadcast. ``probe``
 therefore CO-PARTITIONS: candidates shuffle once by
 ``pmod(url_hash, n_shards)`` and cogroup with the shard rows, so each
 task touches exactly one shard's bitset (~12 MB) and nothing ever
-passes through the driver. A ``sub_splits`` fan-out key keeps task
+passes through the driver. A ``SUB_SPLITS`` fan-out key keeps task
 parallelism above the shard count without duplicating work (each
 (shard, sub) task still reads one bitset).
 
@@ -20,8 +20,9 @@ and the same count to ``probe``. Inferring it from ``max(shard_id)+1``
 would misroute every probe whenever the highest buckets happen to be
 empty — silently voiding the zero-false-negative guarantee
 (test_bloom.py pins this). Each shard sizes itself from its own key
-count: the next power of two ≥ ``BITS_PER_KEY`` bits per key, at least
-2^12 bits, recorded in the shard row the probe reads.
+count: ``BITS_PER_KEY`` bits per key rounded up to a whole byte, at
+least ``MIN_BITS``, recorded in the shard row the probe reads (as is
+``n_hashes``, so a store built with another hash count still probes).
 
 The engine keys its shards by the known base's bucket modulus and
 builds them with the base: whenever a compaction writes known buckets
@@ -51,8 +52,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BLOOM_SCHEMA = "shard_id int, n_shards int, n_bits long, n_hashes int, bitset binary"
-BITS_PER_KEY = 10  # ~1% false positives at 4 hashes
+N_HASHES = 4
+BITS_PER_KEY = 10  # ~1% false positives at N_HASHES
 MIN_BITS = 1 << 12
+SUB_SPLITS = 4  # probe tasks per shard
 
 
 def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -63,22 +66,22 @@ def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(n_bits)).astype(np.int64)
 
 
-def build_shards(seen: DataFrame, n_shards: int, n_hashes: int = 4) -> DataFrame:
+def build_shards(seen: DataFrame, n_shards: int) -> DataFrame:
     """seen(url_hash long) → one bitset row per non-empty shard, each
-    ``BITS_PER_KEY`` bits per key rounded up to a power of two (at least
+    ``BITS_PER_KEY`` bits per key rounded up to a multiple of 8 (at least
     ``MIN_BITS``)."""
 
     def one_shard(key, pdf: pd.DataFrame):
-        n_bits = max(MIN_BITS, 1 << (BITS_PER_KEY * len(pdf) - 1).bit_length())
+        n_bits = max(MIN_BITS, -(-BITS_PER_KEY * len(pdf) // 8) * 8)
         arr = np.zeros(n_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, n_hashes)
+        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, N_HASHES)
         np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
         return pd.DataFrame(
             {
                 "shard_id": [int(key[0])],
                 "n_shards": [n_shards],
                 "n_bits": [n_bits],
-                "n_hashes": [n_hashes],
+                "n_hashes": [N_HASHES],
                 "bitset": [arr.tobytes()],
             }
         )
@@ -92,9 +95,6 @@ def probe(
     candidates: DataFrame,
     shards: DataFrame,
     n_shards: int,
-    hash_col: str = "url_hash",
-    out_col: str = "maybe_seen",
-    sub_splits: int = 4,
 ) -> DataFrame:
     """Add ``maybe_seen`` to candidates. False ⇒ definitely not in seen.
 
@@ -104,16 +104,16 @@ def probe(
 
     ``n_shards`` MUST equal the build-time shard count — it is never
     inferred from which shard ids happen to be present."""
-    sid = F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
-    sub = F.pmod(F.shiftrightunsigned(F.col(hash_col), 13), F.lit(sub_splits)).cast("int")
+    sid = F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int")
+    sub = F.pmod(F.shiftrightunsigned(F.col("url_hash"), 13), F.lit(SUB_SPLITS)).cast("int")
     cand = candidates.withColumn("__sid", sid).withColumn("__sub", sub)
-    subs = spark.range(sub_splits).select(F.col("id").cast("int").alias("__sub"))
+    subs = spark.range(SUB_SPLITS).select(F.col("id").cast("int").alias("__sub"))
     sh = shards.select("shard_id", "n_bits", "n_hashes", "bitset").crossJoin(
         F.broadcast(subs)
     )
 
     out_fields = list(candidates.schema.fields) + [
-        T.StructField(out_col, T.BooleanType(), False)
+        T.StructField("maybe_seen", T.BooleanType(), False)
     ]
     out_schema = T.StructType(out_fields)
     out_cols = [f.name for f in out_fields]
@@ -123,14 +123,14 @@ def probe(
         if shard_pdf.empty:
             # no shard row ⇒ the build saw no keys in this bucket ⇒
             # definitely new (empty buckets emit no row by design)
-            return res.assign(**{out_col: False})[out_cols]
+            return res.assign(maybe_seen=False)[out_cols]
         arr = np.frombuffer(shard_pdf["bitset"].iloc[0], np.uint8)
         n_bits = int(shard_pdf["n_bits"].iloc[0])
         k = int(shard_pdf["n_hashes"].iloc[0])
-        hv = res[hash_col].to_numpy(np.int64)
+        hv = res["url_hash"].to_numpy(np.int64)
         pos = _positions(hv, n_bits, k)
         bits = (arr[pos >> 3] >> (pos & 7)) & 1
-        return res.assign(**{out_col: bits.all(axis=1)})[out_cols]
+        return res.assign(maybe_seen=bits.all(axis=1))[out_cols]
 
     return (
         cand.groupBy("__sid", "__sub")

@@ -93,7 +93,7 @@ def select_round(
     )
 
 
-def robots_gate(links: DataFrame, robots: DataFrame, path_col: str = "path") -> DataFrame:
+def robots_gate(links: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop rows whose path falls under the host's disallow prefix
     (north_rule robots gating; the reference has none — SURVEY §2, F10
     note). robots is a tiny dim → broadcast, no shuffle."""
@@ -102,7 +102,7 @@ def robots_gate(links: DataFrame, robots: DataFrame, path_col: str = "path") -> 
         links.join(F.broadcast(r), "host", "left")
         .filter(
             F.col("disallow_prefix").isNull()
-            | ~F.col(path_col).startswith(F.col("disallow_prefix"))
+            | ~F.col("path").startswith(F.col("disallow_prefix"))
         )
         .drop("disallow_prefix")
     )

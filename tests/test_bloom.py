@@ -53,9 +53,13 @@ def test_no_false_negatives_and_fp_rate(spark):
     seen = spark.range(0, 20_000).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")
     )
-    # ~2,500 keys per shard: each sizes itself to 2^15 bits (≥10 bits/key)
+    # ~2,500 keys per shard: each sizes itself to 10 bits per key,
+    # rounded up to a whole byte (at least 2^12 bits)
     shards = bloom.build_shards(seen, n_shards=8)
-    assert {r["n_bits"] for r in shards.select("n_bits").collect()} == {1 << 15}
+    keys = seen.groupBy(F.pmod("url_hash", F.lit(8)).cast("int").alias("shard_id")).count()
+    widths = {r["shard_id"]: r["n_bits"] for r in shards.collect()}
+    want = {r["shard_id"]: max(1 << 12, -(-10 * r["count"] // 8) * 8) for r in keys.collect()}
+    assert widths == want
     probed = bloom.probe(spark, seen, shards, n_shards=8)
     assert probed.filter(~F.col("maybe_seen")).count() == 0  # zero FN
 

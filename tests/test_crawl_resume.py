@@ -4,6 +4,9 @@ bit-identical to an uninterrupted run (north_rule)."""
 from __future__ import annotations
 
 import hashlib
+import os
+
+import pytest
 
 from housing_crawler_spark import synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
@@ -68,6 +71,23 @@ def test_commit_log_is_atomic(spark, tmp_path):
     eng2 = CrawlEngine(spark, store, WORLD, EngineConfig())
     eng2.run(3)  # retries round 3, overwriting the orphan
     assert store.last_round() == 3
+
+
+def test_recommitting_a_round_raises(tmp_path):
+    """A second commit of a committed round is refused and leaves the log
+    untouched. Appended, the duplicate entry would make the last commit
+    point backwards and the next ``run()`` re-commit later rounds."""
+    store = SnapshotStore(str(tmp_path / "dup"))
+    for rnd in range(3):
+        store.commit_round(rnd, [], {"n_selected": rnd})
+    log = os.path.join(store.root, "_commits.json")
+    with open(log, "rb") as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="round 1 already committed"):
+        store.commit_round(1, [], {"n_selected": 9})
+    with open(log, "rb") as f:
+        assert f.read() == before
+    assert store.last_round() == 2
 
 
 def test_rollback_then_resume_bit_identical(spark, tmp_path):

@@ -1,6 +1,7 @@
 """The store writes every parquet file in one format
 (``snapshots.WRITE_FORMAT``): zstd pages everywhere, dictionary encoding
-for every column but the image payloads. Because it is one format,
+for every column but the image payloads, min/max statistics for every
+column but the bloom bitsets. Because it is one format,
 concurrent writers cannot leak their settings into each other's files
 (parquet-mr's values-writer factory is JVM-wide), so two crawls of the
 same world write byte-for-byte equally sized files. A store written in
@@ -95,6 +96,19 @@ def test_only_image_payloads_skip_dictionary_encoding(store_root):
     for table, column in (("images", "fmt"), ("known", "host_idx")):
         enc = _encodings(store_root, table, column)
         assert any("DICTIONARY" in e for e in enc), (table, column, enc)
+
+
+def test_only_bloom_bitsets_skip_min_max_statistics(store_root):
+    """A bitset under 4 KiB would otherwise be copied into the footer as
+    its own min and max."""
+    min_max = {
+        (_table_of(store_root, p), ch.path_in_schema): ch.is_stats_set
+        and ch.statistics.has_min_max
+        for p in _parquet_files(store_root)
+        for ch in _chunks(p)
+        if _table_of(store_root, p) in ("bloom", "known")
+    }
+    assert {c for c, has in min_max.items() if not has} == {("bloom", "bitset")}
 
 
 def test_same_seed_crawls_write_equal_file_sizes(spark, store_root, tmp_path):

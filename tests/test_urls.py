@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from housing_crawler_spark.functions.urls import (
     canonicalize_url,
     canonicalize_url_py,
-    host_of,
     path_of,
     url_hash,
 )
@@ -74,10 +73,8 @@ def test_spark_matches_python_twin(spark):
 def test_host_path_extraction(spark):
     df = spark.createDataFrame([("https://h.ex/a/b?q=1",)], "url string")
     row = df.select(
-        host_of(F.col("url")).alias("h"),
         path_of(F.col("url")).alias("p"),
         url_hash(F.col("url")).alias("k"),
     ).collect()[0]
-    assert row["h"] == "h.ex"
     assert row["p"] == "/a/b"
     assert isinstance(row["k"], int)
