@@ -43,10 +43,7 @@ per round):
 - round 0 is an ordinary bucketed state: the seeds are written once as
   a bucketed snapshot whose manifest both the known base and known
   delta 0 commit, so every probe and compaction reads a manifest and
-  every compaction is incremental. A base without a manifest (the
-  pre-bucketing store format) or without the ``seen`` column (the
-  two-base format, which kept the frontier in a second base) is
-  rejected (ValueError).
+  every compaction is incremental.
 - ``bloom`` — the seen-filter of a known base: one shard per base
   bucket (the same ``buckets`` modulus), committed as a bucketed
   snapshot in the same round as the base. Whenever a base with at
@@ -54,9 +51,14 @@ per round):
   buckets written are built from their rows, and every other shard
   carries forward by manifest reference; the bloom is never written
   between bases. A base without shards (below ``bloom_min_known``)
-  gates links with one plain exact anti-join. A store whose bloom was
-  rewritten every round (the per-round-bloom format) is rejected.
+  gates links with one plain exact anti-join.
 - ``images`` — append-only deltas (the input_hint image table).
+
+The engine reads only stores of its own layout, and never checks a
+store's shape itself: every commit is stamped with
+``storage.snapshots.LAYOUT_VERSION``, and the commit log refuses any
+other (ValueError), so a base is always bucketed and flagged, every
+bloom indexes its base, and every round records its touched buckets.
 
 A round:
 
@@ -309,7 +311,9 @@ class CrawlEngine:
         n_known = sum(self.store.footer_rows(p) for p in base0["manifest"].values())
         if n_known >= self.cfg.bloom_min_known:
             infos.append(self._write_bloom(base0, 0))
-        self.store.commit_round(0, infos, {"streaks": {}, "halted": [], "n_known": n_known})
+        self.store.commit_round(
+            0, infos, {"streaks": {}, "halted": [], "n_known": n_known, "n_seen": 0}
+        )
 
     # -- derived state ---------------------------------------------------
 
@@ -328,8 +332,8 @@ class CrawlEngine:
         for the latest known base at or before round ``r``: one read of
         each serves the frontier, the known set and the compaction of a
         round."""
-        b = self._base_round(r)
         spark, store = self.spark, self.store
+        b = store.latest_snapshot_round("known", r)
         return (
             b,
             store.read_snapshot(spark, "known", b, schemas.KNOWN),
@@ -392,47 +396,12 @@ class CrawlEngine:
         values in range)."""
         return F.pmod(col, F.lit(self.cfg.buckets)).cast("int")
 
-    def _base_round(self, r: int) -> int:
-        """Round of the latest known base at or before round ``r``. Every
-        base is bucketed and carries the ``seen`` flag from round 0 on,
-        so a base without either can only come from an older store
-        format; so can a commit recording ``bloom_covers``, the coverage
-        of a bloom rewritten every round rather than built with a base
-        (its ``bloom@b`` covers only rounds ≤ b-1, so reading it as
-        base b's filter would admit round b's links twice)."""
-        store = self.store
-        b = store.latest_snapshot_round("known", r)
-        info = None if b is None else store.snapshot_info("known", b)
-        paths = sorted(info["manifest"].values()) if info and "manifest" in info else None
-        if paths is None:
-            fmt = "pre-bucketing format (no bucket manifest on the base snapshots)"
-        elif paths and "seen" not in store.footer_columns(paths[0]):
-            fmt = (
-                "two-base format (a separate frontier base table beside"
-                " known rows with no seen column)"
-            )
-        elif any("bloom_covers" in c["metrics"] for c in store.commits()):
-            fmt = (
-                "per-round-bloom format (bloom snapshots rewritten every"
-                " round, each covering the rounds before it, not a known base)"
-            )
-        else:
-            return b
-        raise ValueError(
-            f"{store.root}: no known base of this engine's layout at or before"
-            f" round {r}; the store uses the {fmt}. Crawl it again from"
-            " init_state into a fresh store."
-        )
-
-    def _touched_since(self, b: int, r: int, touched: list[int]) -> list[int] | None:
+    def _touched_since(self, b: int, r: int, touched: list[int]) -> list[int]:
         """Sorted union of the base buckets rounds b+1..r touched
-        (``touched`` is round r's own, not committed yet); None when a
-        commit in between does not record its ``touched_buckets``."""
+        (``touched`` is round r's own, not committed yet)."""
         out = set(touched)
         for c in self.store.commits():
             if b < c["round"] < r:
-                if "touched_buckets" not in c["metrics"]:
-                    return None
                 out.update(c["metrics"]["touched_buckets"])
         return sorted(out)
 
@@ -530,7 +499,11 @@ class CrawlEngine:
             return fresh, probed
         known_sub = self._known_membership_pruned(b, buckets)
         if known_sub is None:
-            return fresh.unionByName(maybe), probed
+            # a shard exists only for a base bucket with rows
+            raise ValueError(
+                f"{self.store.root}: bloom@{b} has shards for buckets {buckets}"
+                f" that known@{b} has no rows in"
+            )
         keys = ["url_hash", "canonical_url"]
         if n_maybe > BACKSTOP_BROADCAST_MAX:
             # candidate flood (revisit-heavy round): a broadcast this big
@@ -597,10 +570,10 @@ class CrawlEngine:
 
         spark, store, world, cfg = self.spark, self.store, self.world, self.cfg
         last_metrics = store.commits()[-1]["metrics"]
-        streaks: dict[str, int] = dict(last_metrics.get("streaks", {}))
-        halted: set[str] = set(last_metrics.get("halted", []))
+        streaks: dict[str, int] = dict(last_metrics["streaks"])
+        halted: set[str] = set(last_metrics["halted"])
         n_known_prev = last_metrics["n_known"]
-        n_seen_prev = last_metrics.get("n_seen", 0)
+        n_seen_prev = last_metrics["n_seen"]
 
         if self._robots is None:
             self._robots = store.read_snapshot(spark, "robots", 0, schemas.ROBOTS)
@@ -770,8 +743,7 @@ class CrawlEngine:
             # flows through the known deltas (admissions) and fetch_log
             # (seen flags, captcha overrides), so the buckets that changed
             # are exactly those some admitted or fetched URL hashes into —
-            # the union of the ``touched_buckets`` rounds b+1..r recorded
-            # (None: some round did not record them, so every bucket).
+            # the union of the ``touched_buckets`` rounds b+1..r recorded.
             # Every such URL is known, so no dirty bucket is empty. Round
             # r's rows are read back from the dirs just written, so the
             # plan is over files, not over the round's lineage. Rewrite
@@ -883,8 +855,11 @@ class CrawlEngine:
     # -- loop --------------------------------------------------------------
 
     def run(self, n_rounds: int) -> list[dict]:
-        """Run rounds (resuming after the last committed round, if any)."""
-        start = (self.store.last_round() or 0) + 1
+        """Run rounds, resuming after the last committed round."""
+        last = self.store.last_round()
+        if last is None:
+            raise ValueError(f"{self.store.root}: no round committed; run init_state first")
+        start = last + 1
         out = []
         for r in range(start, n_rounds + 1):
             out.append(self.run_round(r))

@@ -2,7 +2,7 @@
 
 PySpark doesn't expose ``DataFrameStatFunctions.bloomFilter`` objects we
 could ship around, so the engine builds its own shards as plain rows
-``(shard_id, n_shards, n_bits, n_hashes, bitset)`` — one shard per
+``(shard_id, n_bits, bitset)`` — one shard per
 ``pmod(url_hash, n_shards)`` bucket — via ``applyInPandas``
 (Arrow-batched numpy bit twiddling, no per-row Python).
 
@@ -21,8 +21,10 @@ would misroute every probe whenever the highest buckets happen to be
 empty — silently voiding the zero-false-negative guarantee
 (test_bloom.py pins this). Each shard sizes itself from its own key
 count: ``BITS_PER_KEY`` bits per key rounded up to a whole byte, at
-least ``MIN_BITS``, recorded in the shard row the probe reads (as is
-``n_hashes``, so a store built with another hash count still probes).
+least ``MIN_BITS``, recorded in the shard row the probe reads. Every
+shard uses ``N_HASHES`` probes; changing it changes what a stored
+bitset means, so it is part of the store layout
+(``storage.snapshots.LAYOUT_VERSION``).
 
 The engine keys its shards by the known base's bucket modulus and
 builds them with the base: whenever a compaction writes known buckets
@@ -51,18 +53,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-BLOOM_SCHEMA = "shard_id int, n_shards int, n_bits long, n_hashes int, bitset binary"
+BLOOM_SCHEMA = "shard_id int, n_bits long, bitset binary"
 N_HASHES = 4
 BITS_PER_KEY = 10  # ~1% false positives at N_HASHES
 MIN_BITS = 1 << 12
 SUB_SPLITS = 4  # probe tasks per shard
 
 
-def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
-    """(n, k) bit positions from int64 url hashes (vectorized)."""
+def _positions(hashes: np.ndarray, n_bits: int) -> np.ndarray:
+    """(n, N_HASHES) bit positions from int64 url hashes (vectorized)."""
     h1 = hashes.astype(np.uint64)
     h2 = ((h1 >> np.uint64(33)) ^ h1) * np.uint64(0xFF51AFD7ED558CCD) | np.uint64(1)
-    i = np.arange(n_hashes, dtype=np.uint64)[None, :]
+    i = np.arange(N_HASHES, dtype=np.uint64)[None, :]
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(n_bits)).astype(np.int64)
 
 
@@ -74,16 +76,10 @@ def build_shards(seen: DataFrame, n_shards: int) -> DataFrame:
     def one_shard(key, pdf: pd.DataFrame):
         n_bits = max(MIN_BITS, -(-BITS_PER_KEY * len(pdf) // 8) * 8)
         arr = np.zeros(n_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits, N_HASHES)
+        pos = _positions(pdf["url_hash"].to_numpy(np.int64), n_bits)
         np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
         return pd.DataFrame(
-            {
-                "shard_id": [int(key[0])],
-                "n_shards": [n_shards],
-                "n_bits": [n_bits],
-                "n_hashes": [N_HASHES],
-                "bitset": [arr.tobytes()],
-            }
+            {"shard_id": [int(key[0])], "n_bits": [n_bits], "bitset": [arr.tobytes()]}
         )
 
     keyed = seen.withColumn("shard_id", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
@@ -108,9 +104,7 @@ def probe(
     sub = F.pmod(F.shiftrightunsigned(F.col("url_hash"), 13), F.lit(SUB_SPLITS)).cast("int")
     cand = candidates.withColumn("__sid", sid).withColumn("__sub", sub)
     subs = spark.range(SUB_SPLITS).select(F.col("id").cast("int").alias("__sub"))
-    sh = shards.select("shard_id", "n_bits", "n_hashes", "bitset").crossJoin(
-        F.broadcast(subs)
-    )
+    sh = shards.select("shard_id", "n_bits", "bitset").crossJoin(F.broadcast(subs))
 
     out_fields = list(candidates.schema.fields) + [
         T.StructField("maybe_seen", T.BooleanType(), False)
@@ -126,9 +120,7 @@ def probe(
             return res.assign(maybe_seen=False)[out_cols]
         arr = np.frombuffer(shard_pdf["bitset"].iloc[0], np.uint8)
         n_bits = int(shard_pdf["n_bits"].iloc[0])
-        k = int(shard_pdf["n_hashes"].iloc[0])
-        hv = res["url_hash"].to_numpy(np.int64)
-        pos = _positions(hv, n_bits, k)
+        pos = _positions(res["url_hash"].to_numpy(np.int64), n_bits)
         bits = (arr[pos >> 3] >> (pos & 7)) & 1
         return res.assign(maybe_seen=bits.all(axis=1))[out_cols]
 

@@ -99,12 +99,10 @@ def iter_frames(buf: bytes, fmt: str):
 CHUNK = 256  # rows per emitted batch — bounds task memory like the image stage
 
 
-def make_audio_features_stage(on_stub: str = "skip"):
-    """audio rows → (duration, rms, zero-crossing rate, peak).
-
-    ``on_stub``: 'skip' emits NULL features for stub formats (the
-    pipeline keeps flowing, rows are marked by fmt); 'raise' surfaces
-    the NotImplementedError (strict mode)."""
+def make_audio_features_stage():
+    """audio rows → (duration, rms, zero-crossing rate, peak). Stub
+    formats get NULL features (the pipeline keeps flowing, rows are
+    marked by fmt)."""
 
     def stage(it):
         for pdf in it:
@@ -114,13 +112,13 @@ def make_audio_features_stage(on_stub: str = "skip"):
                 for aid, buf, fmt in zip(part["audio_id"], part["bytes"], part["fmt"]):
                     out["audio_id"].append(aid)
                     out["fmt"].append(fmt)
-                    if fmt in AUDIO_STUB_FMTS and on_stub == "skip":
+                    if fmt in AUDIO_STUB_FMTS:
                         out["duration_s"].append(None)
                         out["rms"].append(None)
                         out["zero_cross_rate"].append(None)
                         out["peak"].append(None)
                         continue
-                    x, rate = decode_audio(bytes(buf), fmt)  # raises on stub+raise
+                    x, rate = decode_audio(bytes(buf), fmt)
                     xf = x.astype(np.float32)
                     out["duration_s"].append(round(len(x) / rate, 6))
                     out["rms"].append(float(np.sqrt(np.mean(xf * xf))))
@@ -133,9 +131,10 @@ def make_audio_features_stage(on_stub: str = "skip"):
     return stage
 
 
-def make_frame_sample_stage(every_k: int = 5, on_stub: str = "skip"):
+def make_frame_sample_stage(every_k: int = 5):
     """video rows → every k-th frame as an IMAGE-table row (raw codec +
-    phash), ready for the image near-dup/decode toolchain."""
+    phash), ready for the image near-dup/decode toolchain. Stub formats
+    yield no frames."""
     from .images import encode, phash64
 
     def stage(it):
@@ -144,7 +143,7 @@ def make_frame_sample_stage(every_k: int = 5, on_stub: str = "skip"):
             for vid, buf, fmt, caption in zip(
                 pdf["video_id"], pdf["bytes"], pdf["fmt"], pdf["caption"]
             ):
-                if fmt in VIDEO_STUB_FMTS and on_stub == "skip":
+                if fmt in VIDEO_STUB_FMTS:
                     continue
                 for idx, frame in iter_frames(bytes(buf), fmt):
                     if idx % every_k:
@@ -183,9 +182,9 @@ def audio_fingerprint64(x: np.ndarray) -> int:
     return int(word.astype(np.int64))
 
 
-def audio_features(audio: DataFrame, on_stub: str = "skip") -> DataFrame:
-    return audio.mapInPandas(make_audio_features_stage(on_stub), AUDIO_FEATURES_SCHEMA)
+def audio_features(audio: DataFrame) -> DataFrame:
+    return audio.mapInPandas(make_audio_features_stage(), AUDIO_FEATURES_SCHEMA)
 
 
-def sample_frames(video: DataFrame, every_k: int = 5, on_stub: str = "skip") -> DataFrame:
-    return video.mapInPandas(make_frame_sample_stage(every_k, on_stub), FRAME_SCHEMA)
+def sample_frames(video: DataFrame, every_k: int = 5) -> DataFrame:
+    return video.mapInPandas(make_frame_sample_stage(every_k), FRAME_SCHEMA)

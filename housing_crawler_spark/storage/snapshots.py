@@ -11,7 +11,7 @@ narrow so a real Iceberg catalog (``df.writeTo(...).append()`` /
 Layout:
 
     root/
-      _commits.json                     # [{round, tables, ts? no — no clock}, ...]
+      _commits.json                     # [{round, layout, tables, metrics}, ...]
       <table>/snap-000007/*.parquet     # full state of <table> at round 7
       <table>/delta-000007/*.parquet    # append-only delta for round 7
       <table>/snap-000007/<col>=<b>/    # bucketed snapshot: one dir per
@@ -54,19 +54,26 @@ table's dictionary setting (0 of 780 with one format), and one images
 file of two same-seed crawls was 186,282 B in one run and 181,095 B in
 the other: the ~0.5% store-size jitter between identical crawls. With
 one format every writer installs the same properties, and same-seed
-crawls write equal-sized files (test_store_format.py). The codec is recorded per
-column chunk, so files written earlier in other codecs (snappy state,
-uncompressed images) read, resume and compact as before.
+crawls write equal-sized files (test_store_format.py).
+
+The layout is versioned as a whole, like an Iceberg table's
+``format-version``: ``commit_round`` stamps ``LAYOUT_VERSION`` on every
+commit entry, and ``commits()`` raises ValueError on any entry stamped
+otherwise or not at all. Readers above the store therefore never sniff
+a store's shape (a manifest, a column, a metric key). A change to the
+layout, or to what a commit must record, bumps ``LAYOUT_VERSION``.
 
 Commit protocol (crash-safe):
 1. write every table's ``snap-``/``delta-`` dir for round r (parquet
    write is to a temp name then rename by Spark itself);
 2. atomically replace ``_commits.json`` (write ``_commits.json.tmp`` +
-   ``os.replace``) recording round r and per-table row counts + file
-   lists (the per-partition lineage/metrics the north_rule asks for).
+   ``os.replace``) recording round r, its table paths and bucket
+   manifests, and the round's metrics (the per-partition lineage the
+   north_rule asks for).
 
-Readers only ever look at rounds listed in ``_commits.json``; a crash
-mid-round leaves orphan dirs that are ignored and overwritten on retry,
+Readers only ever look at rounds listed in ``_commits.json`` (a read of
+an uncommitted snapshot raises ValueError); a crash mid-round leaves
+orphan dirs that are ignored and overwritten on retry,
 so resume-from-checkpoint is bit-identical to an uninterrupted run
 (test_crawl_resume.py proves it).
 """
@@ -81,6 +88,9 @@ from pyspark.sql.types import StructType
 
 # a table's schema (StructType or DDL string); None infers it from footers
 Schema = StructType | str | None
+
+# the store layout every commit entry is stamped with (module docstring)
+LAYOUT_VERSION = 1
 
 # the parquet format of every file the store writes (module docstring)
 WRITE_FORMAT = {
@@ -102,11 +112,21 @@ class SnapshotStore:
         return os.path.join(self.root, "_commits.json")
 
     def commits(self) -> list[dict]:
+        """The commit log; ValueError if an entry is not stamped with
+        ``LAYOUT_VERSION``."""
         p = self._commits_path()
         if not os.path.exists(p):
             return []
         with open(p) as f:
-            return json.load(f)
+            commits = json.load(f)
+        for c in commits:
+            if c.get("layout") != LAYOUT_VERSION:
+                raise ValueError(
+                    f"{self.root}: round {c.get('round')} was committed at store"
+                    f" layout version {c.get('layout', 'none')}, expected"
+                    f" {LAYOUT_VERSION}. Crawl again from init_state into a fresh store."
+                )
+        return commits
 
     def last_round(self) -> int | None:
         c = self.commits()
@@ -188,7 +208,6 @@ class SnapshotStore:
             "table": table,
             "kind": "snap",
             "path": path,
-            "bucket_col": bucket_col,
             "manifest": {**(inherit or {}), **written},
         }
 
@@ -203,10 +222,7 @@ class SnapshotStore:
     def _write(self, df: DataFrame, table: str, kind: str, rnd: int) -> dict:
         path = self._dir(table, kind, rnd)
         self._writer(df).parquet(path)
-        files = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
-        )
-        return {"table": table, "kind": kind, "path": path, "n_files": len(files)}
+        return {"table": table, "kind": kind, "path": path}
 
     def footer_rows(self, path: str) -> int:
         """Row count of a written parquet dir, read from the file footers
@@ -219,16 +235,6 @@ class SnapshotStore:
             if f.endswith(".parquet") and not f.startswith("_")
         )
 
-    def footer_columns(self, path: str) -> list[str]:
-        """Column names of a written parquet dir, read from one file
-        footer on the driver — no Spark job."""
-        import pyarrow.parquet as pq
-
-        name = min(
-            f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
-        )
-        return pq.read_schema(os.path.join(path, name)).names
-
     def commit_round(self, rnd: int, table_infos: list[dict], metrics: dict) -> None:
         """Atomically record round ``rnd`` as committed.
 
@@ -237,7 +243,9 @@ class SnapshotStore:
         commits = self.commits()
         if any(c["round"] == rnd for c in commits):
             raise ValueError(f"round {rnd} already committed")
-        commits.append({"round": rnd, "tables": table_infos, "metrics": metrics})
+        commits.append(
+            {"round": rnd, "layout": LAYOUT_VERSION, "tables": table_infos, "metrics": metrics}
+        )
         tmp = self._commits_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(commits, f, indent=1)
@@ -265,7 +273,11 @@ class SnapshotStore:
     def read_snapshot(
         self, spark: SparkSession, table: str, rnd: int, schema: Schema = None
     ) -> DataFrame:
-        info = self.snapshot_info(table, rnd) or {"path": self._dir(table, "snap", rnd)}
+        """The committed snapshot of ``table`` at round ``rnd``; ValueError
+        when none is committed (an orphan snap dir stays invisible)."""
+        info = self.snapshot_info(table, rnd)
+        if info is None:
+            raise ValueError(f"{self.root}: no committed {table} snapshot at round {rnd}")
         return self.read_info(spark, info, schema)
 
     def read_info(self, spark: SparkSession, info: dict, schema: Schema = None) -> DataFrame:

@@ -73,6 +73,24 @@ def test_commit_log_is_atomic(spark, tmp_path):
     assert store.last_round() == 3
 
 
+def test_uncommitted_snapshot_read_raises(spark, tmp_path):
+    """Reading a snapshot no commit lists raises, even when its orphan
+    dir exists: the read never falls back to an uncommitted dir."""
+    store = SnapshotStore(str(tmp_path / "orphan"))
+    store.write_snapshot(spark.range(3), "t", 1)
+    with pytest.raises(ValueError, match="no committed t snapshot at round 1"):
+        store.read_snapshot(spark, "t", 1)
+
+
+def test_run_without_init_state_raises(spark, tmp_path):
+    """A crawl needs round 0: running on an empty store raises and
+    commits nothing."""
+    eng = CrawlEngine(spark, SnapshotStore(str(tmp_path / "empty")), WORLD, EngineConfig())
+    with pytest.raises(ValueError, match="init_state"):
+        eng.run(1)
+    assert eng.store.commits() == []
+
+
 def test_recommitting_a_round_raises(tmp_path):
     """A second commit of a committed round is refused and leaves the log
     untouched. Appended, the duplicate entry would make the last commit

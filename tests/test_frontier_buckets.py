@@ -32,7 +32,7 @@ state kept with rewrite volume ∝ touched rows.
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
 
 import pytest
@@ -234,22 +234,23 @@ def test_state_plans_launch_no_spark_jobs(spark, request, world, r):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_compaction_after_unrecorded_round_rewrites_every_bucket(spark, tmp_path, tiny):
-    """A commit without ``touched_buckets`` (a store written before rounds
-    recorded them) makes the next compaction rewrite every bucket — and
-    the state it writes equals the one an incremental compaction wrote."""
-    eng = _mk(spark, str(tmp_path / "legacy"), TINY_WORLD, TINY_CFG, 3)
-    path = os.path.join(eng.store.root, "_commits.json")
-    with open(path) as f:
-        commits = json.load(f)
-    del commits[-1]["metrics"]["touched_buckets"]
-    with open(path, "w") as f:
-        json.dump(commits, f)
-    m4 = eng.run(4)[0]
-    assert m4["known_dirty_buckets"] == TINY_CFG.buckets
-    info = eng.store.snapshot_info("known", 4)
-    assert all("snap-000004" in p for p in info["manifest"].values())
+def test_compaction_where_bloom_activates_rewrites_every_bucket(spark, tmp_path, tiny):
+    """A base below ``bloom_min_known`` gets no bloom shards, so the
+    first compaction whose base reaches it builds every bucket's shard
+    and rewrites every known bucket (the full-rewrite compaction) — and
+    the state it writes equals the incremental twin's."""
+    n_known = {c["round"]: c["metrics"]["n_known"] for c in tiny.store.commits()}
+    assert n_known[0] < n_known[2]
+    cfg = dataclasses.replace(TINY_CFG, bloom_min_known=n_known[2])
+    eng = _mk(spark, str(tmp_path / "late_bloom"), TINY_WORLD, cfg, 2)
+    store = eng.store
+    assert store.snapshot_info("bloom", 0) is None
+    assert store.commits()[-1]["metrics"]["known_dirty_buckets"] == TINY_CFG.buckets
+    bloom2 = store.snapshot_info("bloom", 2)
+    assert bloom2["manifest"].keys() == store.snapshot_info("known", 2)["manifest"].keys()
+    assert all("bloom/snap-000002" in p for p in bloom2["manifest"].values())
+
     def state(e: CrawlEngine) -> list[tuple]:
-        return sorted(tuple(x) for x in e.known(4).collect())
+        return sorted(tuple(x) for x in e.known(2).collect())
 
     assert state(eng) == state(tiny)

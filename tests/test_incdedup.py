@@ -168,10 +168,22 @@ def test_incdedup_zero_document_round_writes_no_state(spark, tmp_path, stream):
 def test_incdedup_shuffle_fallback_matches_twin(spark, tmp_path, stream, monkeypatch):
     """BROADCAST_MAX=0 forces the candidate-flood fallback (shuffle join
     against the same pruned state buckets) on every probe; the
-    assignments still equal the twin's."""
+    assignments still equal the twin's (so the broadcast path's), and
+    the state rows after every round equal the broadcast path's."""
+
+    def states(root: str) -> list[list[tuple]]:
+        store = SnapshotStore(root)
+        return [
+            sorted(tuple(r) for r in store.read_snapshot(spark, _TABLE, rnd).collect())
+            for rnd in range(1, len(stream) + 1)
+        ]
+
+    broadcast, flood = str(tmp_path / "broadcast"), str(tmp_path / "flood")
+    _ingest_vs_twin(spark, broadcast, stream)
     monkeypatch.setattr(incdedup, "BROADCAST_MAX", 0)
-    want = _ingest_vs_twin(spark, str(tmp_path / "store"), stream)
+    want = _ingest_vs_twin(spark, flood, stream)
     assert want[300] == 0 and want[205] == 3  # cross-round matches probed
+    assert states(flood) == states(broadcast)
 
 
 def test_incdedup_resume_from_store(spark, tmp_path, stream):

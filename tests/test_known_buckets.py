@@ -30,8 +30,7 @@ from pyspark.sql import functions as F
 
 from housing_crawler_spark import crawl, synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
-from housing_crawler_spark.functions.urls import url_hash
-from housing_crawler_spark.storage.snapshots import SnapshotStore
+from housing_crawler_spark.storage.snapshots import LAYOUT_VERSION, SnapshotStore
 
 WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
 N_ROUNDS = 8
@@ -196,72 +195,39 @@ def test_shuffle_fallback_backstop_matches_broadcast(
     assert a == c
 
 
-@pytest.mark.parametrize("fmt", ["pre-bucketing", "two-base", "per-round-bloom"])
-def test_resume_from_legacy_unbucketed_store_is_rejected(spark, tmp_path, fmt):
-    """Stores written by older engines are rejected, not crawled on:
-    - pre-bucketing: the known snapshots carry no bucket manifest;
-    - two-base: the frontier lived in a second bucketed base
-      (``frontier_base`` snap entries beside the known base) and known
-      rows had no ``seen`` column;
-    - per-round-bloom: the bloom was rewritten every round, its commits
-      recording the rounds it covered (``bloom_covers``), so a
-      ``bloom@b`` need not index base b.
-    Every base this engine writes is bucketed and flagged from round 0,
-    and every bloom is built with its base, so neither the probe nor the
-    compaction falls back: resuming such a store fails with a ValueError
-    naming the format."""
+@pytest.mark.parametrize("stamp", [None, 0, 2], ids=["unstamped", "older", "newer"])
+def test_store_of_another_layout_is_rejected(spark, tmp_path, stamp):
+    """Stores written at another layout are rejected, not crawled on:
+    one commit entry without the ``LAYOUT_VERSION`` stamp, or stamped
+    with another version, fails the first frontier, known or run call
+    with a ValueError naming the found and expected versions, and the
+    failed run leaves the commit log byte-identical."""
     import json
 
-    root = str(tmp_path / "klegacy")
+    root = str(tmp_path / "klayout")
     eng = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
     eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
-
-    # the seed rows, detached from the files rewritten below
-    seeds = eng.store.read_snapshot(spark, "known", 0)
-    rows = spark.createDataFrame(seeds.toPandas(), seeds.schema)
+    eng.run(1)
     commits_path = os.path.join(root, "_commits.json")
     with open(commits_path) as f:
         commits = json.load(f)
-    tables = commits[0]["tables"]
-    snap = next(t for t in tables if t["table"] == "known" and t["kind"] == "snap")
-    if fmt == "pre-bucketing":
-        # the round-0 known base as a plain (unpartitioned,
-        # manifest-less) parquet of the same rows
-        snap_dir = os.path.join(root, "legacy_known")
-        rows.coalesce(1).write.parquet(snap_dir)
-        snap.pop("manifest")
-        snap.pop("bucket_col")
-        snap["path"] = snap_dir
-    elif fmt == "two-base":
-        # the seed buckets rewritten without the seen column, committed as
-        # known delta 0, known base AND frontier_base base
-        old_dir = os.path.join(root, "frontier_base", "snap-000000")
-        bucket = F.pmod(url_hash(F.col("canonical_url")), F.lit(CFG.buckets))
-        rows.drop("seen").withColumn("__b", bucket).write.mode("overwrite").partitionBy(
-            "__b"
-        ).parquet(old_dir)
-        manifest = {
-            d.split("=")[1]: os.path.join(old_dir, d)
-            for d in os.listdir(old_dir)
-            if d.startswith("__b=")
-        }
-        for t in tables:
-            if t["table"] == "known":
-                t["manifest"], t["path"] = manifest, old_dir
-        tables.insert(1, {**snap, "table": "frontier_base"})
+    if stamp is None:
+        del commits[1]["layout"]
     else:
-        # the per-round bloom bookkeeping of the older engine
-        commits[0]["metrics"].update(bloom_covers=0, bloom_n_bits=1 << 12, bloom_rebuilds=1)
+        commits[1]["layout"] = stamp
     with open(commits_path, "w") as f:
         json.dump(commits, f)
+    with open(commits_path, "rb") as f:
+        before = f.read()
 
+    found = "none" if stamp is None else stamp
+    msg = f"layout version {found}, expected {LAYOUT_VERSION}"
     resumed = CrawlEngine(spark, SnapshotStore(root), WORLD, CFG)
-    with pytest.raises(ValueError, match=f"{fmt} format"):
-        resumed._since_base(0)
-    # the crawl stops at round 1's frontier read without committing it
-    with pytest.raises(ValueError, match=f"{fmt} format"):
-        resumed.run(2)
-    assert resumed.store.last_round() == 0
+    for call in (resumed.frontier, resumed.known, resumed.run):
+        with pytest.raises(ValueError, match=msg):
+            call(2)
+    with open(commits_path, "rb") as f:
+        assert f.read() == before
 
 
 def test_bucketed_write_requires_static_overwrite_mode(spark, tmp_path):
