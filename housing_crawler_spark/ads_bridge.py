@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import schemas
 from .queries_etl_pipeline import build_raw_ads
 from .storage.snapshots import SnapshotStore
 
@@ -75,7 +76,7 @@ def etl_from_store(
     r = store.last_round() if up_to_round is None else up_to_round
     if r is None:
         raise ValueError("store has no committed rounds")
-    log = store.read_deltas(spark, "fetch_log", r, from_round=from_round)
+    log = store.read_deltas(spark, "fetch_log", r, from_round, schemas.FETCH_LOG)
     if log is None:
         raise ValueError("store has no fetch_log deltas")
     details = log.filter(F.col("kind") == "detail")

@@ -41,9 +41,9 @@ per round):
   manifest without writing a byte, and since a row only ever gains a
   flag or an override, no bucket goes empty (test_frontier_buckets.py).
 - round 0 is an ordinary bucketed state: the seeds are written once as
-  a bucketed snapshot whose manifest both the known base and known
-  delta 0 commit, so every probe and compaction reads a manifest and
-  every compaction is incremental.
+  a bucketed snapshot whose manifest (bucket → round 0) both the known
+  base and known delta 0 commit, so every probe and compaction reads a
+  manifest and every compaction is incremental.
 - ``bloom`` — the seen-filter of a known base: one shard per base
   bucket (the same ``buckets`` modulus), committed as a bucketed
   snapshot in the same round as the base. Whenever a base with at
@@ -58,7 +58,9 @@ The engine reads only stores of its own layout, and never checks a
 store's shape itself: every commit is stamped with
 ``storage.snapshots.LAYOUT_VERSION``, and the commit log refuses any
 other (ValueError), so a base is always bucketed and flagged, every
-bloom indexes its base, and every round records its touched buckets.
+bloom indexes its base, and every round records ``dirty_since_base``,
+the base buckets changed since the latest base ([] in a round that
+writes a base), so a compaction reads its dirty set from one commit.
 
 A round:
 
@@ -99,7 +101,7 @@ from .functions.strings import clean_caption
 from .functions.urls import canonicalize_url, path_of, url_hash
 from .operators import bloom
 from .operators.frontier import first_seen_wins, robots_gate, select_round, with_budgets
-from .storage.snapshots import SnapshotStore
+from .storage.snapshots import BUCKET, SnapshotStore
 
 
 @dataclass
@@ -124,7 +126,6 @@ class EngineConfig:
 # would pressure the driver, while the fallback still reads only pruned
 # buckets)
 BACKSTOP_BROADCAST_MAX = 2_000_000
-BUCKET_COL = "__b"  # partition column of the bucketed snapshots
 
 # frontier rows (attempts/next_round only meaningful post-captcha-
 # override); a known row (``schemas.KNOWN``) is a frontier row plus its
@@ -308,11 +309,13 @@ class CrawlEngine:
             # a few rows per host: one file, not one per core
             self.store.write_snapshot(robots.coalesce(1), "robots", 0),
         ]
-        n_known = sum(self.store.footer_rows(p) for p in base0["manifest"].values())
+        n_known = self.store.footer_rows(base0, 0)
         if n_known >= self.cfg.bloom_min_known:
             infos.append(self._write_bloom(base0, 0))
         self.store.commit_round(
-            0, infos, {"streaks": {}, "halted": [], "n_known": n_known, "n_seen": 0}
+            0,
+            infos,
+            {"streaks": {}, "halted": [], "n_known": n_known, "n_seen": 0, "dirty_since_base": []},
         )
 
     # -- derived state ---------------------------------------------------
@@ -396,15 +399,6 @@ class CrawlEngine:
         values in range)."""
         return F.pmod(col, F.lit(self.cfg.buckets)).cast("int")
 
-    def _touched_since(self, b: int, r: int, touched: list[int]) -> list[int]:
-        """Sorted union of the base buckets rounds b+1..r touched
-        (``touched`` is round r's own, not committed yet)."""
-        out = set(touched)
-        for c in self.store.commits():
-            if b < c["round"] < r:
-                out.update(c["metrics"]["touched_buckets"])
-        return sorted(out)
-
     def _write_buckets(
         self,
         rows: DataFrame,
@@ -427,19 +421,12 @@ class CrawlEngine:
         )
         out = (
             rows.withColumn("__h", url_hash(F.col("canonical_url")))
-            .withColumn(BUCKET_COL, self._bucket(F.col("__h")))
-            .repartition(n_tasks, BUCKET_COL)
-            .sortWithinPartitions(BUCKET_COL, "__h")
+            .withColumn(BUCKET, self._bucket(F.col("__h")))
+            .repartition(n_tasks, BUCKET)
+            .sortWithinPartitions(BUCKET, "__h")
             .drop("__h")
         )
-        return self.store.write_bucketed_snapshot(
-            out,
-            "known",
-            r,
-            BUCKET_COL,
-            inherit=None if prev is None else prev["manifest"],
-            dirty=dirty,
-        )
+        return self.store.write_bucketed_snapshot(out, "known", r, prev, dirty)
 
     def _write_bloom(
         self, base: dict, r: int, dirty: list[int] | None = None, prev: dict | None = None
@@ -449,17 +436,10 @@ class CrawlEngine:
         every bucket when None), built from that bucket's rows read back
         from its files; every other shard carries forward by reference
         from ``prev``, the previous base's bloom."""
-        man = base["manifest"]
-        written = {k: man[k] for k in (man if dirty is None else map(str, dirty))}
-        rows = self.store.read_info(self.spark, {"manifest": written}, schemas.KNOWN)
+        rows = self.store.read_info(self.spark, base, r, schemas.KNOWN, dirty)
         shards = bloom.build_shards(_keyed(rows), self.cfg.buckets)
         return self.store.write_bucketed_snapshot(
-            shards.withColumn(BUCKET_COL, F.col("shard_id")),
-            "bloom",
-            r,
-            BUCKET_COL,
-            inherit=None if prev is None else prev["manifest"],
-            dirty=dirty,
+            shards.withColumn(BUCKET, F.col("shard_id")), "bloom", r, prev, dirty
         )
 
     def _known_membership_pruned(self, b: int, buckets: list[int]) -> DataFrame | None:
@@ -621,7 +601,7 @@ class CrawlEngine:
             # bloom and the bucket-pruned backstop
             if adds is not None:
                 links = links.join(_keyed(adds), keys, "left_anti")
-            shards = store.read_info(spark, bloom_info, bloom.BLOOM_SCHEMA)
+            shards = store.read_info(spark, bloom_info, b, bloom.BLOOM_SCHEMA)
             links, probe_cache = self._bucket_pruned_backstop(b, links, shards)
         links = links.drop("url_hash")
         new_entries = (
@@ -660,7 +640,9 @@ class CrawlEngine:
             )
             .collect()
         )
-        touched = sorted({int(x) for row in stats for x in row["buckets"]})
+        # the base buckets changed since base b, this round's included
+        touched = {int(x) for row in stats for x in row["buckets"]}
+        dirty_since = sorted(touched.union(last_metrics["dirty_since_base"]))
         mark("fetch_and_links_exec")
         if probe_cache is not None:
             # new_entries' cache is materialized by the stats job above,
@@ -743,7 +725,7 @@ class CrawlEngine:
             # flows through the known deltas (admissions) and fetch_log
             # (seen flags, captcha overrides), so the buckets that changed
             # are exactly those some admitted or fetched URL hashes into —
-            # the union of the ``touched_buckets`` rounds b+1..r recorded.
+            # ``dirty_since``, the previous commit's set plus this round's.
             # Every such URL is known, so no dirty bucket is empty. Round
             # r's rows are read back from the dirs just written, so the
             # plan is over files, not over the round's lineage. Rewrite
@@ -753,16 +735,12 @@ class CrawlEngine:
             # (every bucket's, when base b has none).
             prev = store.snapshot_info("known", b)
             with_bloom = n_known >= cfg.bloom_min_known
-            dirty = (
-                None
-                if with_bloom and bloom_info is None
-                else self._touched_since(b, r, touched)
-            )
+            dirty = None if with_bloom and bloom_info is None else dirty_since
             scan = range(cfg.buckets) if dirty is None else dirty
             n_dirty = len(scan)
             if scan:
                 new_known = (
-                    store.read_info(spark, done_infos["known"], schemas.KNOWN)
+                    store.read_info(spark, done_infos["known"], r, schemas.KNOWN)
                     if "known" in done_infos
                     else None
                 )
@@ -774,7 +752,7 @@ class CrawlEngine:
                     ],
                     STATE_COLS,
                 )
-                new_log = store.read_info(spark, done_infos["fetch_log"], schemas.FETCH_LOG)
+                new_log = store.read_info(spark, done_infos["fetch_log"], r, schemas.FETCH_LOG)
                 log_all = _union([log_since, new_log], LOG_COLS)
                 base_r = self._write_buckets(self._state(rows, log_all), r, prev, dirty)
                 infos.append(base_r)
@@ -782,6 +760,7 @@ class CrawlEngine:
                     infos.append(self._write_bloom(base_r, r, dirty, bloom_info))
             else:  # a quiet interval re-commits the old manifests
                 infos.extend(dict(i) for i in (prev, bloom_info) if i is not None)
+            dirty_since = []  # round r is the new base
             mark("compaction")
 
         metrics = {
@@ -795,7 +774,7 @@ class CrawlEngine:
                 h: sum(row["count"] for row in kind_host if row["host"] == h)
                 for h in {row["host"] for row in kind_host}
             },
-            "touched_buckets": touched,
+            "dirty_since_base": dirty_since,
             "timings": timings,
             **({} if bloom_info is None else {"bloom_base": b}),
             **({} if n_dirty is None else {"known_dirty_buckets": n_dirty}),
@@ -843,12 +822,11 @@ class CrawlEngine:
         r = self.store.last_round() + 1
         infos = [self.store.write_delta(images, "images", r)]
         prev = self.store.commits()[-1]["metrics"]
-        n = self.store.footer_rows(infos[0]["path"])
-        # images only: the round touches no known-base bucket
+        n = self.store.footer_rows(infos[0], r)
+        # images only: the round carries the previous round's crawl state
+        carried = ("streaks", "halted", "n_known", "n_seen", "dirty_since_base")
         self.store.commit_round(
-            r,
-            infos,
-            {**prev, "backfill": True, "n_backfilled_images": n, "touched_buckets": []},
+            r, infos, {**{k: prev[k] for k in carried}, "backfill": True, "n_backfilled_images": n}
         )
         return {"round": r, "n_backfilled_images": n}
 

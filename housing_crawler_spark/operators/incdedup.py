@@ -73,7 +73,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries_ml import md5int, tokens
-from ..storage.snapshots import SnapshotStore
+from ..storage.snapshots import BUCKET, SnapshotStore
 from .graph import star_components
 
 _TABLE = "dedup_bands"
@@ -84,6 +84,9 @@ TAU = 6  # Hamming confirm threshold (exact copies hash identically)
 # band rows above which the probe falls back from broadcasting the
 # round's band table to a shuffle join (still over pruned buckets)
 BROADCAST_MAX = 2_000_000
+# the rows of the state table, passed to every state read: an inferred
+# schema costs a one-task footer job per read
+STATE_SCHEMA = "band_k int, band_val long, simhash long, rep long"
 
 
 def sketch_table(docs: DataFrame) -> DataFrame:
@@ -163,7 +166,7 @@ class IncrementalDeduper:
         if self._last_round is None:
             return None
         return self.store.read_snapshot_buckets(
-            self.spark, self.table, self._last_round, buckets
+            self.spark, self.table, self._last_round, buckets, STATE_SCHEMA
         )
 
     def ingest(self, rnd: int, docs: DataFrame) -> DataFrame:
@@ -320,11 +323,10 @@ class IncrementalDeduper:
             )
             infos.append(
                 store.write_bucketed_snapshot(
-                    df_dirty,
+                    df_dirty.withColumnRenamed("bucket", BUCKET),
                     self.table,
                     rnd,
-                    "bucket",
-                    inherit=(prev_info or {}).get("manifest"),
+                    inherit=prev_info,
                     dirty=buckets,
                 )
             )

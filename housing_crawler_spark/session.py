@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # paths in one parquet read above which Spark lists them with a parallel
 # Spark job instead of on the driver (its default is 32). Crawl reads
-# name manifest paths, one per bucket: at the default, every read of a
+# name one dir per manifest bucket: at the default, every read of a
 # 64-bucket base launched a listing job, each paying the job floor
 PARTITION_DISCOVERY_THRESHOLD = 1 << 16
 

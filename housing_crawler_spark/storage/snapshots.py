@@ -14,10 +14,18 @@ Layout:
       _commits.json                     # [{round, layout, tables, metrics}, ...]
       <table>/snap-000007/*.parquet     # full state of <table> at round 7
       <table>/delta-000007/*.parquet    # append-only delta for round 7
-      <table>/snap-000007/<col>=<b>/    # bucketed snapshot: one dir per
-                                        # bucket, listed by the commit
-                                        # entry's manifest (which may also
-                                        # point into older snap dirs)
+      <table>/snap-000007/__b=<b>/      # bucketed snapshot: one dir per
+                                        # bucket (partition column BUCKET)
+
+A commit entry names its data, never a path, like a Delta Lake "add"
+action names its file relative to the table root: a plain entry is
+``{table, kind}`` and its data is the ``<kind>-NNNNNN`` dir of the
+round it is committed in; a bucketed entry's ``manifest`` maps each
+bucket to the round whose ``snap-`` dir holds it (an older round for a
+bucket carried forward by reference). ``SnapshotStore`` is the only
+code that turns an entry into paths (``_paths``), so a store can be
+moved or copied and resumed, and its log does not grow with the length
+of its root.
 
 Every parquet file of every table (crawl state, bloom shards, images,
 incdedup state) is written in ONE format, ``WRITE_FORMAT``:
@@ -67,7 +75,7 @@ Commit protocol (crash-safe):
 1. write every table's ``snap-``/``delta-`` dir for round r (parquet
    write is to a temp name then rename by Spark itself);
 2. atomically replace ``_commits.json`` (write ``_commits.json.tmp`` +
-   ``os.replace``) recording round r, its table paths and bucket
+   ``os.replace``) recording round r, its table entries and bucket
    manifests, and the round's metrics (the per-partition lineage the
    north_rule asks for).
 
@@ -90,7 +98,11 @@ from pyspark.sql.types import StructType
 Schema = StructType | str | None
 
 # the store layout every commit entry is stamped with (module docstring)
-LAYOUT_VERSION = 1
+LAYOUT_VERSION = 2
+
+# the partition column of every bucketed snapshot: a caller's rows carry
+# their bucket in it, and bucket b's dir is ``snap-NNNNNN/__b=b``
+BUCKET = "__b"
 
 # the parquet format of every file the store writes (module docstring)
 WRITE_FORMAT = {
@@ -110,6 +122,13 @@ class SnapshotStore:
 
     def _commits_path(self) -> str:
         return os.path.join(self.root, "_commits.json")
+
+    def _write_log(self, commits: list[dict]) -> None:
+        """Atomically replace the commit log: ``.tmp`` + ``os.replace``."""
+        tmp = self._commits_path() + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(commits, f, indent=1)
+        os.replace(tmp, self._commits_path())
 
     def commits(self) -> list[dict]:
         """The commit log; ValueError if an entry is not stamped with
@@ -137,6 +156,19 @@ class SnapshotStore:
     def _dir(self, table: str, kind: str, rnd: int) -> str:
         return os.path.join(self.root, table, f"{kind}-{rnd:06d}")
 
+    def _paths(self, info: dict, rnd: int, buckets: list[int] | None = None) -> list[str]:
+        """The data dirs of ``info``, an entry of round ``rnd``: its own
+        snap/delta dir, or the bucket dirs its manifest names (only those
+        of ``buckets`` when given), each in the snap dir of its round."""
+        if "manifest" not in info:
+            return [self._dir(info["table"], info["kind"], rnd)]
+        man = info["manifest"]
+        keys = man.keys() if buckets is None else man.keys() & {str(b) for b in buckets}
+        return sorted(
+            os.path.join(self._dir(info["table"], "snap", man[k]), f"{BUCKET}={k}")
+            for k in keys
+        )
+
     def write_snapshot(self, df: DataFrame, table: str, rnd: int) -> dict:
         return self._write(df, table, "snap", rnd)
 
@@ -145,19 +177,18 @@ class SnapshotStore:
         df_dirty: DataFrame,
         table: str,
         rnd: int,
-        bucket_col: str,
-        inherit: dict[str, str] | None = None,
+        inherit: dict | None = None,
         dirty: list[int] | None = None,
     ) -> dict:
         """Incremental (Iceberg-manifest-shaped) snapshot: ``df_dirty``
         holds the FULL current rows of only the buckets that changed,
-        keyed by ``bucket_col``. They are written partitioned by bucket
-        under this round's snap dir; every untouched bucket is carried
-        forward by REFERENCE — its manifest entry keeps pointing at the
-        older round's bucket dir, zero bytes rewritten. Readers use the
-        manifest (``read_snapshot`` / ``read_snapshot_buckets`` /
-        ``read_info``), so a compaction's write volume is ∝ dirty-bucket
-        rows, not |table|.
+        keyed by the ``BUCKET`` column. They are written partitioned by
+        bucket under this round's snap dir; every other bucket of
+        ``inherit`` (the previous snapshot's entry) is carried forward by
+        REFERENCE — its manifest entry keeps naming the older round, zero
+        bytes rewritten. Readers use the manifest (``read_snapshot`` /
+        ``read_snapshot_buckets`` / ``read_info``), so a compaction's
+        write volume is ∝ dirty-bucket rows, not |table|.
 
         ``dirty`` (when given) lists every bucket the caller knows
         changed, and each must come out with rows: no table this store
@@ -187,29 +218,21 @@ class SnapshotStore:
                 f"{mode!r} — the listdir-derived manifest would adopt stale"
                 " bucket dirs from crashed attempts"
             )
-        self._writer(df_dirty).partitionBy(bucket_col).parquet(path)
-        prefix = f"{bucket_col}="
-        written = {
-            d[len(prefix):]: os.path.join(path, d)
-            for d in sorted(os.listdir(path))
-            if d.startswith(prefix)
-        }
+        self._writer(df_dirty).partitionBy(BUCKET).parquet(path)
+        prefix = f"{BUCKET}="
+        written = [d[len(prefix):] for d in sorted(os.listdir(path)) if d.startswith(prefix)]
         if dirty is not None:
             keys = {str(b) for b in dirty}
-            missing = sorted(keys - written.keys())
+            missing = sorted(keys - set(written))
             if missing:
                 raise ValueError(
                     f"{table}@{rnd}: declared dirty buckets {missing} came out with no rows"
                 )
             # never adopt a dir outside the declared dirty set (second
             # line of defense vs stale dirs)
-            written = {k: p for k, p in written.items() if k in keys}
-        return {
-            "table": table,
-            "kind": "snap",
-            "path": path,
-            "manifest": {**(inherit or {}), **written},
-        }
+            written = [k for k in written if k in keys]
+        manifest = {**(inherit["manifest"] if inherit else {}), **dict.fromkeys(written, rnd)}
+        return {"table": table, "kind": "snap", "manifest": manifest}
 
     def write_delta(self, df: DataFrame, table: str, rnd: int) -> dict:
         return self._write(df, table, "delta", rnd)
@@ -220,18 +243,18 @@ class SnapshotStore:
         return df.write.mode("overwrite").options(**WRITE_FORMAT)
 
     def _write(self, df: DataFrame, table: str, kind: str, rnd: int) -> dict:
-        path = self._dir(table, kind, rnd)
-        self._writer(df).parquet(path)
-        return {"table": table, "kind": kind, "path": path}
+        self._writer(df).parquet(self._dir(table, kind, rnd))
+        return {"table": table, "kind": kind}
 
-    def footer_rows(self, path: str) -> int:
-        """Row count of a written parquet dir, read from the file footers
-        on the driver — no Spark job."""
+    def footer_rows(self, info: dict, rnd: int) -> int:
+        """Row count of ``info``, a write info of round ``rnd``, read from
+        its files' footers on the driver — no Spark job."""
         import pyarrow.parquet as pq
 
         return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
+            pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+            for d in self._paths(info, rnd)
+            for f in os.listdir(d)
             if f.endswith(".parquet") and not f.startswith("_")
         )
 
@@ -246,10 +269,7 @@ class SnapshotStore:
         commits.append(
             {"round": rnd, "layout": LAYOUT_VERSION, "tables": table_infos, "metrics": metrics}
         )
-        tmp = self._commits_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(commits, f, indent=1)
-        os.replace(tmp, self._commits_path())
+        self._write_log(commits)
 
     # -- read --------------------------------------------------------------
 
@@ -278,15 +298,22 @@ class SnapshotStore:
         info = self.snapshot_info(table, rnd)
         if info is None:
             raise ValueError(f"{self.root}: no committed {table} snapshot at round {rnd}")
-        return self.read_info(spark, info, schema)
+        return self.read_info(spark, info, rnd, schema)
 
-    def read_info(self, spark: SparkSession, info: dict, schema: Schema = None) -> DataFrame:
-        """The rows of one write info (committed or not yet): every bucket
-        of a bucketed snapshot's manifest, or a plain snap/delta dir."""
-        reader = self._reader(spark, schema)
-        if "manifest" not in info:
-            return reader.parquet(info["path"])
-        return reader.parquet(*sorted(info["manifest"].values()))
+    def read_info(
+        self,
+        spark: SparkSession,
+        info: dict,
+        rnd: int,
+        schema: Schema = None,
+        buckets: list[int] | None = None,
+    ) -> DataFrame | None:
+        """The rows of ``info``, a write info of round ``rnd`` (committed
+        or not yet): a plain snap/delta dir, or the bucket dirs of its
+        manifest, only those of ``buckets`` when given; None when that
+        names no bucket."""
+        paths = self._paths(info, rnd, buckets)
+        return self._reader(spark, schema).parquet(*paths) if paths else None
 
     def read_snapshot_buckets(
         self,
@@ -296,32 +323,27 @@ class SnapshotStore:
         buckets: list[int],
         schema: Schema = None,
     ) -> DataFrame | None:
-        """Bucket-pruned read of a bucketed snapshot: only the manifest
-        paths for ``buckets`` are listed/scanned — the I/O the per-round
+        """Bucket-pruned read of a bucketed snapshot: only the dirs of
+        ``buckets`` are listed/scanned — the I/O the per-round
         membership probe pays is ∝ candidate buckets, not |table|."""
         info = self.snapshot_info(table, rnd)
         if info is None or "manifest" not in info:
             raise ValueError(f"{table}@{rnd} not bucketed")
-        manifest = info["manifest"]
-        paths = [manifest[str(b)] for b in sorted(set(buckets)) if str(b) in manifest]
-        return self._reader(spark, schema).parquet(*paths) if paths else None
+        return self.read_info(spark, info, rnd, schema, buckets)
 
     def _delta_paths(self, table: str, from_round: int, up_to_round: int) -> list[str]:
         """Committed delta dirs for ``table`` in [from_round, up_to]. A
         delta entry with a bucket manifest owns no dir of its own: its
         rows are the manifest's bucket dirs (data committed once and
         shared with a snapshot)."""
-        paths = []
-        for c in self.commits():
-            if not (from_round <= c["round"] <= up_to_round):
-                continue
-            for t in c["tables"]:
-                if t["table"] == table and t["kind"] == "delta":
-                    if "manifest" in t:
-                        paths.extend(sorted(t["manifest"].values()))
-                    else:
-                        paths.append(t["path"])
-        return paths
+        return [
+            p
+            for c in self.commits()
+            if from_round <= c["round"] <= up_to_round
+            for t in c["tables"]
+            if t["table"] == table and t["kind"] == "delta"
+            for p in self._paths(t, c["round"])
+        ]
 
     def read_deltas(
         self,
@@ -353,10 +375,7 @@ class SnapshotStore:
         if not keep:
             raise ValueError(f"no committed round <= {to_round} to roll back to")
         if dropped:
-            tmp = self._commits_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(keep, f, indent=1)
-            os.replace(tmp, self._commits_path())
+            self._write_log(keep)
         return dropped
 
     def latest_snapshot_round(self, table: str, up_to_round: int) -> int | None:

@@ -3,7 +3,7 @@
 Round-4 measured +16.1% wall for 2 compaction rounds with the
 monolithic known_base (full O(|known|) rewrite each cycle). Round 5
 bucketed the known set (hash buckets + manifest carry-forward: clean
-buckets keep their old snap path, zero bytes rewritten), so the same
+buckets keep naming their old snap dir, zero bytes rewritten), so the same
 A/B should show the overhead dropping. This script re-runs that
 experiment: identical world, compact_every=4 vs compaction effectively
 off, and reports wall seconds plus the bytes actually written under

@@ -34,6 +34,15 @@ def test_backfill_restores_missing_images(spark, tmp_path):
 
     res = eng.backfill_images(N_ROUNDS)
     assert res["n_backfilled_images"] > 0
+    # the backfill commit carries the crawl state of the round before it
+    # and claims none of that round's work (fetches, admissions, timings)
+    prev, bf = (c["metrics"] for c in store.commits()[-2:])
+    carried = ("streaks", "halted", "n_known", "n_seen", "dirty_since_base")
+    assert set(bf) == {*carried, "backfill", "n_backfilled_images"}
+    assert {k: bf[k] for k in carried} == {k: prev[k] for k in carried}
+    assert prev["dirty_since_base"]
+    assert bf["backfill"] is True
+    assert bf["n_backfilled_images"] == res["n_backfilled_images"]
 
     sim = simulate(WORLD, N_ROUNDS)
     got = {

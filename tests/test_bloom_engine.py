@@ -74,7 +74,7 @@ def _snap_rounds(store: SnapshotStore, table: str) -> list[int]:
 def test_incremental_deltas_touch_only_dirty_shards(engines):
     """The bloom is written in exactly the known base rounds, and at each
     one it rewrites exactly the buckets the base rewrites; every other
-    shard keeps its previous manifest path."""
+    shard keeps its previous manifest entry."""
     on, _ = engines
     store = on.store
     rounds = _snap_rounds(store, "known")
@@ -82,7 +82,7 @@ def test_incremental_deltas_touch_only_dirty_shards(engines):
     assert _snap_rounds(store, "bloom") == rounds
 
     def rewritten(man: dict, r: int) -> set[str]:
-        return {k for k, path in man.items() if f"snap-{r:06d}" in path}
+        return {k for k, at in man.items() if at == r}
 
     n_rewritten = []
     for prev_r, r in zip([None, *rounds], rounds):

@@ -201,6 +201,27 @@ def test_incdedup_resume_from_store(spark, tmp_path, stream):
     assert got[300] == 0
 
 
+def test_state_plan_launches_no_spark_jobs(spark, tmp_path, stream):
+    """The state read passes ``STATE_SCHEMA``, so building ``_state_sub``'s
+    plan runs no footer-inference job: 0 Spark jobs until an action.
+    The schema is the written files' own."""
+    store = SnapshotStore(str(tmp_path / "store"))
+    dd = IncrementalDeduper(spark, store, n_buckets=8)
+    dd.ingest(1, stream[0])
+    group = "incdedup-state-plan"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build the state plan only")
+    try:
+        sub = dd._state_sub(list(range(8)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    written = spark.read.parquet(os.path.join(store.root, _TABLE, "snap-000001", "__b=*"))
+    assert [(f.name, f.dataType) for f in written.schema] == [
+        (f.name, f.dataType) for f in sub.schema
+    ]
+
+
 def test_incdedup_probe_is_bucket_pruned_and_unshuffled(
     spark, tmp_path, stream, monkeypatch
 ):
@@ -214,10 +235,10 @@ def test_incdedup_probe_is_bucket_pruned_and_unshuffled(
     asked: list[list[int]] = []
     real = store.read_snapshot_buckets
 
-    def spy(sparkp, table, rnd, buckets):
+    def spy(sparkp, table, rnd, buckets, schema=None):
         if table == _TABLE:
             asked.append(sorted(buckets))
-        return real(sparkp, table, rnd, buckets)
+        return real(sparkp, table, rnd, buckets, schema)
 
     monkeypatch.setattr(store, "read_snapshot_buckets", spy)
     docs2 = stream[1]

@@ -6,9 +6,9 @@ Three guarantees, each asserted at the artifact level, not inferred:
 (a) INCREMENTAL COMPACTION — a known_base compaction rewrites only the
     url_hash buckets that gained rows since the previous base; every
     clean bucket's manifest entry is carried forward BY REFERENCE
-    (identical path string into the older snap dir, zero bytes).
+    (it keeps naming the older round's snap dir, zero bytes).
 (b) PRUNED, SHUFFLE-FREE PROBE — the per-round exact backstop reads
-    only the manifest paths of the buckets the bloom-surviving
+    only the bucket dirs of the buckets the bloom-surviving
     candidates hash into, and the known side of both probe joins is
     never shuffled (BroadcastHashJoin with known as the streamed side:
     no "Exchange hashpartitioning" anywhere in the plan).
@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from housing_crawler_spark import crawl, synth
 from housing_crawler_spark.crawl import CrawlEngine, EngineConfig
-from housing_crawler_spark.storage.snapshots import LAYOUT_VERSION, SnapshotStore
+from housing_crawler_spark.storage.snapshots import BUCKET, LAYOUT_VERSION, SnapshotStore
 
 WORLD = synth.WorldConfig(n_hosts=4, base_pages=6)
 N_ROUNDS = 8
@@ -83,24 +83,24 @@ def test_compaction_rewrites_only_dirty_buckets(bucketed):
     for rnd, info in snaps:
         assert "manifest" in info, f"known snap @ r{rnd} not bucketed"
     # from the first compaction on, every manifest must inherit ≥1
-    # clean-bucket path from an OLDER snap dir, and rewrite only dirty
+    # clean bucket from an OLDER snap dir, and rewrite only dirty
     # buckets
     for (r0, a), (r1, b) in zip(snaps, snaps[1:]):
         man0, man1 = a["manifest"], b["manifest"]
-        inherited = [k for k, p in man1.items() if man0.get(k) == p]
-        rewritten = [k for k, p in man1.items() if man0.get(k) != p]
+        inherited = [k for k, at in man1.items() if man0.get(k) == at]
+        rewritten = [k for k, at in man1.items() if man0.get(k) != at]
         assert inherited, f"r{r1}: no bucket carried forward by reference"
         # rewritten buckets are exactly the dirty ones the engine counted
         m = next(
             c["metrics"] for c in bucketed.store.commits() if c["round"] == r1
         )
         assert m["known_dirty_buckets"] == len(rewritten), (r1, rewritten)
-        # rewritten entries live under THIS round's snap dir; inherited
-        # entries still point into older rounds' dirs (zero bytes moved)
+        # rewritten entries live in THIS round's snap dir; inherited
+        # entries still name older rounds' dirs (zero bytes moved)
         for k in rewritten:
-            assert f"snap-{r1:06d}" in man1[k], man1[k]
+            assert man1[k] == r1, (k, man1[k])
         for k in inherited:
-            assert f"snap-{r1:06d}" not in man1[k], man1[k]
+            assert man1[k] < r1, (k, man1[k])
 
 
 def test_manifest_union_is_exact_membership(spark, bucketed):
@@ -124,8 +124,11 @@ def test_pruned_membership_reads_only_candidate_buckets(spark, bucketed):
     df = bucketed._known_membership_pruned(b, want)
     files = df.inputFiles()
     assert files, "pruned read returned no files"
+    man = info["manifest"]
     allowed = tuple(
-        os.path.abspath(info["manifest"][str(x)]) for x in want if str(x) in info["manifest"]
+        os.path.join(os.path.abspath(store.root), "known", f"snap-{man[str(x)]:06d}", f"__b={x}")
+        for x in want
+        if str(x) in man
     )
     for f in files:
         local = os.path.abspath(f.replace("file:", ""))
@@ -195,7 +198,7 @@ def test_shuffle_fallback_backstop_matches_broadcast(
     assert a == c
 
 
-@pytest.mark.parametrize("stamp", [None, 0, 2], ids=["unstamped", "older", "newer"])
+@pytest.mark.parametrize("stamp", [None, 1, 3], ids=["unstamped", "older", "newer"])
 def test_store_of_another_layout_is_rejected(spark, tmp_path, stamp):
     """Stores written at another layout are rejected, not crawled on:
     one commit entry without the ``LAYOUT_VERSION`` stamp, or stamped
@@ -235,15 +238,15 @@ def test_bucketed_write_requires_static_overwrite_mode(spark, tmp_path):
     crashed attempt survive into the listdir-derived manifest; the write
     refuses up front (round-5 advice)."""
     store = SnapshotStore(str(tmp_path / "kdyn"))
-    df = spark.range(10).withColumn("__kb", (F.col("id") % 4).cast("int"))
+    df = spark.range(10).withColumn(BUCKET, (F.col("id") % 4).cast("int"))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         with pytest.raises(ValueError, match="partitionOverwriteMode"):
-            store.write_bucketed_snapshot(df, "known", 1, "__kb")
+            store.write_bucketed_snapshot(df, "known", 1)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     # back to static: the same write succeeds
-    info = store.write_bucketed_snapshot(df, "known", 1, "__kb")
+    info = store.write_bucketed_snapshot(df, "known", 1)
     assert sorted(info["manifest"]) == ["0", "1", "2", "3"]
 
 
@@ -268,6 +271,31 @@ def test_resume_over_bucketed_base_is_bit_identical(spark, tmp_path, bucketed):
         for r in bucketed.fetch_log(N_ROUNDS).orderBy("round", "host_idx", "rank").collect()
     ]
     assert la == lb
+
+
+def test_store_moved_to_another_root_resumes_identically(spark, tmp_path, bucketed):
+    """A commit entry names its data by round, never by path: a store
+    copied to a root of another length, past a compaction with a bloom,
+    and with its original deleted, resumes to the uninterrupted run's
+    state, and its log never mentions the old root."""
+    import shutil
+
+    from .test_crawl_resume import _state_digest
+
+    old = str(tmp_path / "kmove")
+    eng = CrawlEngine(spark, SnapshotStore(old), WORLD, CFG)
+    eng.init_state(synth.seed_frontier_rows(WORLD), synth.robots_rows(WORLD))
+    eng.run(5)  # compaction (known + bloom bases) at rounds 2 and 4
+    assert eng.store.snapshot_info("bloom", 4) is not None
+    new = str(tmp_path / "elsewhere" / "kmoved")
+    shutil.copytree(old, new)
+    shutil.rmtree(old)
+    with open(os.path.join(new, "_commits.json")) as f:
+        assert old not in f.read()
+
+    moved = CrawlEngine(spark, SnapshotStore(new), WORLD, CFG)
+    moved.run(N_ROUNDS)
+    assert _state_digest(moved, N_ROUNDS) == _state_digest(bucketed, N_ROUNDS)
 
 
 def test_failed_concurrent_delta_write_leaves_round_uncommitted(
