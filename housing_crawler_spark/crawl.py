@@ -92,6 +92,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -226,7 +227,7 @@ def make_image_stage(cfg: synth.WorldConfig, verify_decode: bool = False):
                         if verify_decode:
                             out, f2 = decode(buf)
                             ok = f2 == fmt and (
-                                out.tobytes() == img.tobytes()
+                                np.array_equal(out, img)
                                 if fmt in LOSSLESS
                                 else psnr(img, out) >= 40.0
                             )
@@ -790,7 +791,9 @@ class CrawlEngine:
 
     def backfill_images(self, up_to_round: int) -> dict:
         """Regenerate image rows for every fetched detail page that has
-        none in the images table; committed as a new round."""
+        none in the images table; committed as a new round. When no page
+        lacks images, nothing is written or committed and ``round`` is
+        the last committed one."""
         spark = self.spark
         details = self.fetch_log(up_to_round).filter(F.col("kind") == "detail")
         present = (
@@ -814,6 +817,8 @@ class CrawlEngine:
                 "attempts",
             )
         )
+        if missing.isEmpty():
+            return {"round": self.store.last_round(), "n_backfilled_images": 0}
         refetched = missing.repartition(
             _shuffle_partitions(spark),
             "canonical_url",

@@ -69,7 +69,9 @@ The layout is versioned as a whole, like an Iceberg table's
 commit entry, and ``commits()`` raises ValueError on any entry stamped
 otherwise or not at all. Readers above the store therefore never sniff
 a store's shape (a manifest, a column, a metric key). A change to the
-layout, or to what a commit must record, bumps ``LAYOUT_VERSION``.
+layout, or to what a commit must record, bumps ``LAYOUT_VERSION``; so
+does a change to what stored bytes mean (3: dctq image payloads became
+``DCZ2``), since one table must not mix two payload layouts.
 
 Commit protocol (crash-safe):
 1. write every table's ``snap-``/``delta-`` dir for round r (parquet
@@ -98,7 +100,7 @@ from pyspark.sql.types import StructType
 Schema = StructType | str | None
 
 # the store layout every commit entry is stamped with (module docstring)
-LAYOUT_VERSION = 2
+LAYOUT_VERSION = 3
 
 # the partition column of every bucketed snapshot: a caller's rows carry
 # their bucket in it, and bucket b's dir is ``snap-NNNNNN/__b=b``

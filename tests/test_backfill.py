@@ -55,6 +55,13 @@ def test_backfill_restores_missing_images(spark, tmp_path):
     }
     assert got == want
 
-    # idempotent: nothing missing afterwards
+    # idempotent: nothing missing afterwards, so nothing is written and
+    # no round is committed
+    with open(commits_path, "rb") as f:
+        log_before = f.read()
+    images_dirs = sorted(os.listdir(os.path.join(store.root, "images")))
     res2 = eng.backfill_images(res["round"])
-    assert res2["n_backfilled_images"] == 0
+    assert res2 == {"round": res["round"], "n_backfilled_images": 0}
+    with open(commits_path, "rb") as f:
+        assert f.read() == log_before
+    assert sorted(os.listdir(os.path.join(store.root, "images"))) == images_dirs

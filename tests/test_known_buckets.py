@@ -198,7 +198,7 @@ def test_shuffle_fallback_backstop_matches_broadcast(
     assert a == c
 
 
-@pytest.mark.parametrize("stamp", [None, 1, 3], ids=["unstamped", "older", "newer"])
+@pytest.mark.parametrize("stamp", [None, 2, 4], ids=["unstamped", "older", "newer"])
 def test_store_of_another_layout_is_rejected(spark, tmp_path, stamp):
     """Stores written at another layout are rejected, not crawled on:
     one commit entry without the ``LAYOUT_VERSION`` stamp, or stamped
